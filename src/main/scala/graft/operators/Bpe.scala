@@ -125,8 +125,8 @@ object Bpe {
     * Memoized per (sfDir) — all three surfaces ([[merges]], [[vocab]],
     * [[encode]]) consume one training run, like IVF/PQ/PageRank. */
   private def train(spark: SparkSession, sfDir: String): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val vKey = s"bpe_vocab_${Merges}_${Materialize.dirTag(sfDir)}"
-    val mKey = s"spark.graft.bpe.merges.${Materialize.dirTag(sfDir)}"
+    val vKey = s"bpe_vocab_${Merges}_${Materialize.dirTag(spark, sfDir)}"
+    val mKey = s"spark.graft.bpe.merges.${Materialize.dirTag(spark, sfDir)}"
     val vocabDf = Materialize.memoized(spark, vKey) {
       val (learned, v) = trainLoop(wordCounts(spark, sfDir), Merges)
       spark.conf.set(mKey, learned
@@ -238,7 +238,7 @@ object Bpe {
     * Vocabulary-bounded (chars + one symbol per merge); deterministic,
     * so a conf value surviving a `Materialize.reset` stays exact. */
   private def symbolVocab(spark: SparkSession, sfDir: String): IndexedSeq[String] = {
-    val key = s"spark.graft.bpe.syms.${Materialize.dirTag(sfDir)}"
+    val key = s"spark.graft.bpe.syms.${Materialize.dirTag(spark, sfDir)}"
     spark.conf.getOption(key) match {
       case Some(packed) => packed.split("\u0001").toIndexedSeq
       case None =>
@@ -500,8 +500,8 @@ object Bpe {
     * 256 steps). */
   private def trainScaledOver(spark: SparkSession, sfDir: String, tag: String,
       words: => DataFrame): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val vKey = s"bpe_scaled_${tag}_${ScaledMerges}_${TopWordTypes}_${Materialize.dirTag(sfDir)}"
-    val mKey = s"spark.graft.bpe.scaledmerges.$tag.${Materialize.dirTag(sfDir)}"
+    val vKey = s"bpe_scaled_${tag}_${ScaledMerges}_${TopWordTypes}_${Materialize.dirTag(spark, sfDir)}"
+    val mKey = s"spark.graft.bpe.scaledmerges.$tag.${Materialize.dirTag(spark, sfDir)}"
     val vocabDf = Materialize.memoized(spark, vKey) {
       val wc = words
         .groupBy(col("word")).agg(count(lit(1)).as("cnt"))

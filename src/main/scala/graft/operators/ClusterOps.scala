@@ -115,7 +115,7 @@ object ClusterOps {
     import org.apache.spark.sql.expressions.Window
     var inner: DataFrame = null
     val labels = Materialize.memoized(spark,
-        s"cc_labels_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(sfDir)}") {
+        s"cc_labels_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(spark, sfDir)}") {
       inner = componentsOf(spark,
         DedupOps.nearDupJaccard(spark, sfDir).select(col("doc_a"), col("doc_b")))
       inner
@@ -128,7 +128,7 @@ object ClusterOps {
     // rep-quality/size-histogram/leakage-split + sql twins) previously
     // re-ran the label join + corpus-wide size window each
     Materialize.memoized(spark,
-        s"cc_clusters_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(sfDir)}") {
+        s"cc_clusters_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(spark, sfDir)}") {
       Tables.documents(spark, sfDir).select(col("doc_id"))
         .join(labels.toDF("doc_id", "label"), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
@@ -179,7 +179,7 @@ object ClusterOps {
   def incrementalClusters(spark: SparkSession, sfDir: String): DataFrame = {
     var inners: List[DataFrame] = Nil
     val labels = Materialize.memoized(spark,
-        s"cc_incr_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(sfDir)}") {
+        s"cc_incr_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(spark, sfDir)}") {
       val sigs = DedupOps.signatures(spark, sfDir, keepHs = true)
       val baseLabels = componentsOf(spark,
         DedupOps.nearDupJaccard(spark, sfDir)

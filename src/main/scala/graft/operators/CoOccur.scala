@@ -89,7 +89,7 @@ object CoOccur {
     * ([[GraphRank.pagerank]]) verbatim. */
   private[graft] def pairCounts(spark: SparkSession, sfDir: String): DataFrame =
     Materialize.memoized(spark,
-        s"skipgram_pairs_${Window}_${Materialize.dirTag(sfDir)}") {
+        s"skipgram_pairs_${Window}_${Materialize.dirTag(spark, sfDir)}") {
       Tables.documentsBalanced(spark, sfDir)
         .where(col("text").isNotNull)
         .select(explode(pairStructs(tokensCol)).as("p"))

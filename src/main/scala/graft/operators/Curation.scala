@@ -40,7 +40,7 @@ object Curation {
       .select(col("keep_doc_id").as("doc_id"))
     val quality = TextAnalysis.qualityScore(spark, sfDir)
     val survivors = Materialize.memoized(spark,
-        s"manifest_survivors_${Materialize.dirTag(sfDir)}") {
+        s"manifest_survivors_${Materialize.dirTag(spark, sfDir)}") {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("lang"))
         .join(keep, "doc_id")

@@ -228,7 +228,7 @@ object DataQuality {
     // re-ran the orders⋈lineitem cogroup — the one typed-Dataset
     // aggregation in the library, lineitem-scale)
     Materialize.memoized(spark,
-        s"reconcile_${Materialize.dirTag(sfDir)}") {
+        s"reconcile_${Materialize.dirTag(spark, sfDir)}") {
       reconcileCore(
         Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_orderstatus")),
         Tables.lineitem(spark, sfDir).select(col("l_orderkey"), col("l_linenumber")))

@@ -66,7 +66,7 @@ object Decontamination {
     val useBc = graft.GraftConf.deconBroadcastEval(spark)
     val bc: DataFrame => DataFrame = if (useBc) broadcast else identity
     val docs = Tables.documents(spark, sfDir)
-    val evalSh = Materialize.memoized(spark, s"evalsh_${Materialize.dirTag(sfDir)}") {
+    val evalSh = Materialize.memoized(spark, s"evalsh_${Materialize.dirTag(spark, sfDir)}") {
       shingleRows(docs.where(col("source") === EvalSource))
     }
     val evalHashes = evalSh.select(col("h")).distinct()
@@ -74,7 +74,7 @@ object Decontamination {
     // is part of the key — flipping it mid-session must not serve the
     // other variant's checkpoint
     val corpusMatched = Materialize.memoized(spark,
-        s"corpussh_${if (useBc) "b" else "s"}_${Materialize.dirTag(sfDir)}") {
+        s"corpussh_${if (useBc) "b" else "s"}_${Materialize.dirTag(spark, sfDir)}") {
       // distinct AFTER the broadcast semi-join, not before: the two
       // commute exactly (the join on h against a DISTINCT eval-hash
       // set is a pure filter, and dedup-then-filter == filter-then-

@@ -113,7 +113,7 @@ object DedupOps {
     * (variant, dir, session) via [[Materialize]] so repeated query
     * constructions never leak checkpoint blocks. */
   private[graft] def signatures(spark: SparkSession, sfDir: String, keepHs: Boolean): DataFrame = {
-    val tag = Materialize.dirTag(sfDir)
+    val tag = Materialize.dirTag(spark, sfDir)
     def build = Materialize.memoized(spark, s"minhash_sig_${keepHs}_$tag") {
       val mins = (0 until NumHashes).map(i => min(TextOps.permute(col("h"), i)).as(s"m$i"))
       val aggs = if (keepHs) mins :+ collect_set(col("h")).as("hs") else mins
@@ -313,7 +313,7 @@ object DedupOps {
     // bucket cap in the key: bandRows reads it at plan time (r16 ADVICE
     // — a mid-session cap change must rebuild, not serve a stale memo)
     Materialize.memoized(spark,
-        s"neardup_pairs_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(sfDir)}") {
+        s"neardup_pairs_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(spark, sfDir)}") {
       nearDupJaccardFromSignatures(signatures(spark, sfDir, keepHs = true))
     }
 
@@ -537,7 +537,7 @@ object DedupOps {
     // straight from executor blocks (measured ~2× vs lazy persist at
     // sf0.1; same fault-tolerance trade-off as kmeansCentroids).
     // Memoized per (dir, session) — see Materialize.
-    val sig = Materialize.memoized(spark, s"simhash_sig_${Materialize.dirTag(sfDir)}") {
+    val sig = Materialize.memoized(spark, s"simhash_sig_${Materialize.dirTag(spark, sfDir)}") {
       simhashCore(spark, sfDir)
     }
     // pair-set output memoized too: the banding + Hamming verification
@@ -547,7 +547,7 @@ object DedupOps {
     // the build reads it at plan time, so changing the conf mid-session
     // must rebuild, not serve the other cap's checkpoint (r16 ADVICE).
     Materialize.memoized(spark,
-        s"simhash_pairs_${graft.GraftConf.simhashHotCap(spark)}_${Materialize.dirTag(sfDir)}") {
+        s"simhash_pairs_${graft.GraftConf.simhashHotCap(spark)}_${Materialize.dirTag(spark, sfDir)}") {
       simhashNearDupsFromSignatures(sig)
     }.orderBy(col("doc_a").asc, col("doc_b").asc)
   }
@@ -645,7 +645,7 @@ object DedupOps {
     // output-memo billing policy). Keyed by the minhash bucket cap its
     // near-dup arm depends on (r16 ADVICE).
     Materialize.memoized(spark,
-        s"priority_dedup_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(sfDir)}") {
+        s"priority_dedup_${graft.GraftConf.minhashBucketCap(spark)}_${Materialize.dirTag(spark, sfDir)}") {
     val src = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
     val hashed = hashedDocs(spark, sfDir)
     val prio = hashed.where(col("source") === PrioritySource)

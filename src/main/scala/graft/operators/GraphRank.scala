@@ -63,7 +63,7 @@ object GraphRank {
     // re-derived it (~0.7 s each at sf0.1); the grouped edge frame is
     // vocab²-bounded and slim
     Materialize.memoized(spark,
-        s"item_edges_${gapUs}_${Materialize.dirTag(sfDir)}") {
+        s"item_edges_${gapUs}_${Materialize.dirTag(spark, sfDir)}") {
       itemEdgesBuild(spark, sfDir, gapUs)
     }
   }
@@ -94,17 +94,17 @@ object GraphRank {
     * IVF/PQ models. */
   def pagerank(spark: SparkSession, sfDir: String): DataFrame =
     Materialize.memoized(spark,
-        s"pagerank_${PageRankIters}_${Materialize.dirTag(sfDir)}") {
+        s"pagerank_${PageRankIters}_${Materialize.dirTag(spark, sfDir)}") {
       pagerankBuild(spark, sfDir)
     }.orderBy(col("node").asc)
 
   /** Bounded collect behind the graph family's driver-side iterations
     * (r16 verdict item 3: the collects assumed a ~100-item vocabulary
     * FOREVER — true of every fixture, but an assumption about the
-    * data, not an enforced invariant). `limit(cap+1).collect()` bounds
-    * what can ever reach the driver (CollectLimit stops producing past
-    * the cap — the full frame is never gathered), and a `None` tells
-    * the caller to run its retained distributed iteration instead.
+    * data, not an enforced invariant). A `count()` probe bounds what
+    * can ever reach the driver: the frame is collected only when it
+    * holds at most cap rows, and a `None` tells the caller to run its
+    * retained distributed iteration instead.
     * Cap = `spark.graft.graph.collectCap` (default 1M slim edge rows
     * ≈ tens of MB of driver tuples); a pure plan-shape knob — both
     * paths are bit-exact by construction, so results are invariant to
@@ -418,7 +418,7 @@ object GraphRank {
     * each. */
   def kcore(spark: SparkSession, sfDir: String): DataFrame =
     Materialize.memoized(spark,
-        s"kcore_${KCoreK}_${KCoreRounds}_${Materialize.dirTag(sfDir)}") {
+        s"kcore_${KCoreK}_${KCoreRounds}_${Materialize.dirTag(spark, sfDir)}") {
       kcoreOf(itemEdges(spark, sfDir), KCoreK, KCoreRounds)
     }.orderBy(col("node").asc)
 

@@ -132,7 +132,7 @@ object HeavyHitters {
       Tables.documents(spark, sfDir)
         .where(col("text").isNotNull)
         .select(explode(TextOps.tokens(col("text"))).as("item")),
-      HhK, s"tok_${HhK}_${Materialize.dirTag(sfDir)}")
+      HhK, s"tok_${HhK}_${Materialize.dirTag(spark, sfDir)}")
       .withColumnRenamed("item", "tok")
 
   /** (p_brand, cnt): part brands with exact count > n/[[BrandK]] —
@@ -143,7 +143,7 @@ object HeavyHitters {
       Tables.part(spark, sfDir)
         .where(col("p_brand").isNotNull)
         .select(col("p_brand").as("item")),
-      BrandK, s"brand_${BrandK}_${Materialize.dirTag(sfDir)}")
+      BrandK, s"brand_${BrandK}_${Materialize.dirTag(spark, sfDir)}")
       .withColumnRenamed("item", "p_brand")
 
   /** [[heavyTokens]]'s oracle: the exact vocabulary-shuffle aggregate

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Tables
+
 /** Session-scoped memoization of eagerly-checkpointed frames.
   *
   * The dedup/curation pipelines materialize a small per-doc frame (the
@@ -17,9 +19,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of that operator holds, so nothing can free blocks out from under a
   * registered view.
   *
-  * Staleness contract (same as the ANN plane memo and the pipeline
-  * views): rewriting a corpus at the same path within the same session
-  * keeps the memoized frame — call [[reset]] or use a fresh session.
+  * Staleness contract: memo keys end in [[dirTag]], which carries a
+  * fingerprint of the corpus directory's files, so rewriting a corpus
+  * at the same path within a session builds a NEW `graft_ckpt_*` memo
+  * and never serves the old checkpoint. The superseded memo stays
+  * registered (its blocks are held) until [[reset]]. Registered
+  * `PipelineViews` are not re-keyed: a view registered before the
+  * rewrite keeps its frame until re-registered.
   */
 private[graft] object Materialize {
 
@@ -52,14 +58,14 @@ private[graft] object Materialize {
   }
 
   /** Key-safe tag for a fixture dir: the sanitized path (readable in
-    * view names) plus an md5 suffix, so two dirs that differ only in
-    * punctuation — or that a 32-bit `hashCode` would collide — can
-    * never share a memo and serve each other's checkpointed corpus. */
-  def dirTag(sfDir: String): String = {
+    * view names), an md5 suffix of the path, so two dirs that differ
+    * only in punctuation can never share a memo, and the fingerprint of
+    * the dir's leaf files (`Tables.listing`, one listing, no data
+    * read), so a corpus rewritten at the same path gets a new tag. */
+  def dirTag(spark: SparkSession, sfDir: String): String = {
     val clean = sfDir.map(c => if (c.isLetterOrDigit) c else '_')
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
-    s"${clean}_$md5"
+    val files = Tables.listing(spark, sfDir).fingerprint.take(12)
+    s"${clean}_${Tables.md5Hex(sfDir).take(12)}_$files"
   }
 
   /** Free the checkpoint blocks behind an eagerly-localCheckpoint'ed

@@ -61,7 +61,7 @@ object ProductQuant {
     // the memo is exact, and Materialize.reset (bench pass-2 hygiene)
     // drops it with every other checkpoint memo.
     val memo = Materialize.memoized(spark,
-        s"pq_books_${PqK}_${PqIters}_${Materialize.dirTag(sfDir)}") {
+        s"pq_books_${PqK}_${PqIters}_${Materialize.dirTag(spark, sfDir)}") {
       val books = pqTrainBuild(spark, sfDir)
       spark.createDataFrame(
         for { (b, s) <- books.zipWithIndex; c <- b }
@@ -224,7 +224,7 @@ object ProductQuant {
     val coarseK = graft.GraftConf.ivfKResolved(spark,
       Similarity.corpusCount(spark, sfDir))
     Materialize.memoized(spark,
-        s"pq_index_${PqK}_${PqIters}_k${coarseK}_${Materialize.dirTag(sfDir)}") {
+        s"pq_index_${PqK}_${PqIters}_k${coarseK}_${Materialize.dirTag(spark, sfDir)}") {
       val books = pqTrain(spark, sfDir)
       val cl = Similarity.centsLit(Similarity.trainedCentroids(spark, sfDir))
       // the encode pass runs m×k kernels per row — spread it (no-op
@@ -385,7 +385,7 @@ object ProductQuant {
   private def pqResidTrain(spark: SparkSession, sfDir: String)
       : IndexedSeq[IndexedSeq[CentLit]] = {
     val memo = Materialize.memoized(spark,
-        s"pq_resid_books_${PqK}_${PqIters}_${Materialize.dirTag(sfDir)}") {
+        s"pq_resid_books_${PqK}_${PqIters}_${Materialize.dirTag(spark, sfDir)}") {
       val books = pqTrainOver(pqResidSample(spark, sfDir),
         PqM, SubDim, PqK, PqIters)
       spark.createDataFrame(
@@ -410,7 +410,7 @@ object ProductQuant {
       Similarity.corpusCount(spark, sfDir))
     var resid: DataFrame = null
     val out = Materialize.memoized(spark,
-        s"pq_resid_index_${PqK}_${PqIters}_k${coarseK}_${Materialize.dirTag(sfDir)}") {
+        s"pq_resid_index_${PqK}_${PqIters}_k${coarseK}_${Materialize.dirTag(spark, sfDir)}") {
       val books = pqResidTrain(spark, sfDir)
       val cm = coarseCentMap(spark, sfDir)
       val codes = pqCodeCols(books)
@@ -501,7 +501,7 @@ object ProductQuant {
   private def pqSmallBooks(spark: SparkSession, sfDir: String)
       : IndexedSeq[IndexedSeq[CentLit]] = {
     val memo = Materialize.memoized(spark,
-        s"pq_small_books_${SmallK}_${SmallIters}_${Materialize.dirTag(sfDir)}") {
+        s"pq_small_books_${SmallK}_${SmallIters}_${Materialize.dirTag(spark, sfDir)}") {
       val books = pqTrainOver(pqSample(spark, sfDir),
         SmallM, SmallSub, SmallK, SmallIters)
       spark.createDataFrame(

@@ -183,7 +183,7 @@ object Retrieval {
     * encode-once/serve-many shape. */
   private[graft] def bm25PerDocAll(spark: SparkSession, sfDir: String): DataFrame =
     Materialize.memoized(spark,
-        s"bm25_perdoc_${Bm25AllTerms.size}_${Materialize.dirTag(sfDir)}") {
+        s"bm25_perdoc_${Bm25AllTerms.size}_${Materialize.dirTag(spark, sfDir)}") {
       bm25PerDocFor(Tables.documents(spark, sfDir), Bm25AllTerms)
     }
 

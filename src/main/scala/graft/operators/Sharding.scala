@@ -109,7 +109,7 @@ object Sharding {
     // shared by curriculum_order and sql_curriculum (each previously
     // re-ran the quality scoring + banded windows)
     Materialize.memoized(spark,
-        s"curriculum_${bands}_${Materialize.dirTag(sfDir)}") {
+        s"curriculum_${bands}_${Materialize.dirTag(spark, sfDir)}") {
       curriculumOrderBuild(spark, sfDir, bands)
     }.orderBy(col("pos").asc)
   }

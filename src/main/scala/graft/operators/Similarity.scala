@@ -69,18 +69,18 @@ object Similarity {
 
   /** Plane count for a corpus dir: `spark.graft.ann.planes` if set
     * (runtime override, same channel as GraftConf), else derived from
-    * the corpus row count ONCE per (session, dir) — the count is
-    * parquet-footer metadata, but there is no reason to re-run even
-    * that job on every query construction. The memo lives in the
-    * session's own conf (`spark.graft.ann.planes.derived:<dir>`), NOT a
-    * static map: nothing outlives or pins the session, and the cached
-    * value is user-visible. Staleness caveat: rewriting the corpus at
-    * the same path within the same session keeps the memo — unset the
-    * derived key or set the override (the SQL twin always derives from
-    * a live COUNT(*)). */
+    * the corpus row count ONCE per (session, table version) — the
+    * count is parquet-footer metadata, but there is no reason to re-run
+    * even that job on every query construction. The memo lives in the
+    * session's own conf (`spark.graft.ann.planes.derived:<sourceKey>`),
+    * NOT a static map: nothing outlives or pins the session, and the
+    * cached value is user-visible. The key is the table's
+    * [[Tables.sourceKey]], so a corpus rewritten at the same path
+    * re-derives from a fresh count. */
   private def annPlanes(spark: SparkSession, sfDir: String): Int =
     spark.conf.getOption(graft.GraftConf.AnnPlanesKey).map(_.toInt).getOrElse {
-      val memoKey = s"${graft.GraftConf.AnnPlanesKey}.derived:$sfDir"
+      val memoKey = s"${graft.GraftConf.AnnPlanesKey}.derived:" +
+        Tables.sourceKey(spark, s"$sfDir/embeddings.parquet")
       spark.conf.getOption(memoKey).map(_.toInt).getOrElse {
         val p = annPlanesFor(Tables.embeddings(spark, sfDir).count())
         spark.conf.set(memoKey, p.toString)
@@ -125,7 +125,7 @@ object Similarity {
     * measured as the r10 1.3–1.7× kNN/ANN drift, PLANS.md), rebalance
     * once; at real scale (thousands of splits) the split condition is
     * false and no exchange is added. The bytes gate reads parquet FILE
-    * SIZES (one FS listing, memoized per (session, dir)) — no job, no
+    * SIZES (one FS listing per call, [[embedBytes]]) — no job, no
     * RDD materialization on the small-table path. Round-robin
     * redistribution cannot change any result: every consumer
     * aggregates with commutative exact arithmetic or sorts
@@ -137,24 +137,12 @@ object Similarity {
     * fixture does not. */
   private[graft] val RebalanceMinBytes = 16L << 20
 
-  /** Total parquet bytes of the embeddings table — ONE driver-side FS
-    * listing per (session, dir), memoized in session conf like
-    * [[annPlanes]] (on an object store a recursive listing is a real
-    * per-call cost, and corpus() runs twice per query construction).
-    * Doubles as the data fingerprint for [[corpusCount]]'s memo key;
-    * with the memo that fingerprint is per-SESSION-stable — a corpus
-    * grown mid-session is re-detected only after `spark.conf.unset`,
-    * the same staleness trade-off [[annPlanes]] documents. */
-  private[graft] def embedBytes(spark: SparkSession, sfDir: String): Long = {
-    val memoKey = s"spark.graft.internal.embedBytes:$sfDir"
-    spark.conf.getOption(memoKey).map(_.toLong).getOrElse {
-      val p = new org.apache.hadoop.fs.Path(s"$sfDir/embeddings.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val n = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-      spark.conf.set(memoKey, n.toString)
-      n
-    }
-  }
+  /** Total parquet bytes of the embeddings table, from the same leaf
+    * listing that keys the table's relation memo (one driver-side FS
+    * listing, no data read). Read fresh on every call, so a corpus
+    * grown mid-session is seen at once. */
+  private[graft] def embedBytes(spark: SparkSession, sfDir: String): Long =
+    Tables.listing(spark, s"$sfDir/embeddings.parquet").bytes
 
   private[graft] def corpus(spark: SparkSession, sfDir: String): DataFrame = {
     DotLong.register(spark)
@@ -637,13 +625,14 @@ object Similarity {
     * count on the raw embeddings table (no quantization work), memoized
     * in session conf per directory so auto mode costs ONE count job
     * per (session, dir) however many consumers resolve k. The memo key
-    * carries the table's on-disk byte fingerprint ([[embedBytes]]):
-    * when data under sfDir grows (the incremental-ingest scenarios),
-    * the fingerprint changes and auto-k re-resolves from a fresh count
-    * instead of the stale cached n. */
+    * carries the table's [[Tables.sourceKey]]: when the table is grown
+    * or rewritten (the incremental-ingest scenarios), the key changes
+    * and auto-k re-resolves from a fresh count instead of the stale
+    * cached n. */
   private[graft] def corpusCount(spark: SparkSession, sfDir: String): Long = {
     val memoKey =
-      s"${graft.GraftConf.IvfKKey}.corpusCount:$sfDir:${embedBytes(spark, sfDir)}"
+      s"${graft.GraftConf.IvfKKey}.corpusCount:" +
+        Tables.sourceKey(spark, s"$sfDir/embeddings.parquet")
     spark.conf.getOption(memoKey).map(_.toLong).getOrElse {
       val n = graft.sources.Tables.embeddings(spark, sfDir).count()
       spark.conf.set(memoKey, n.toString)
@@ -662,7 +651,7 @@ object Similarity {
   private[graft] def trainedCentroidsK(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
     var inner: DataFrame = null
     val out = Materialize.memoized(spark,
-        s"kmeans_cent_${k}_${TrainedIters}_${Materialize.dirTag(sfDir)}") {
+        s"kmeans_cent_${k}_${TrainedIters}_${Materialize.dirTag(spark, sfDir)}") {
       inner = kmeansCentroids(spark, sfDir, k, TrainedIters)
       inner
     }
@@ -685,7 +674,7 @@ object Similarity {
 
   /** Load a persisted quantizer for serving. */
   def loadTrainedIndex(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir).select(col("cid"), col("cq"), col("cn2"))
+    Tables.parquet(spark, indexDir).select(col("cid"), col("cq"), col("cn2"))
 
   /** IVF search against a PERSISTED index — [[ivfTrainedTopK]] with the
     * training replaced by an artifact load; identical plan otherwise. */
@@ -715,7 +704,7 @@ object Similarity {
     * persisted index whose array order varies run-to-run is a trap
     * for any future positional consumer. */
   private[graft] def knnCellIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Materialize.memoized(spark, s"knn_cell_index_${Materialize.dirTag(sfDir)}") {
+    Materialize.memoized(spark, s"knn_cell_index_${Materialize.dirTag(spark, sfDir)}") {
       val emb = corpus(spark, sfDir)
       val cl = trainedCentroidLiteral(spark, sfDir)
       emb.where(col("vec_id") % KnnQueryMod =!= 0 && col("n2") > 0)
@@ -814,7 +803,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val cap = graft.GraftConf.semdedupCellCap(spark)
     val cells = Materialize.memoized(spark,
-        s"semdedup_cells_${Materialize.dirTag(sfDir)}") {
+        s"semdedup_cells_${Materialize.dirTag(spark, sfDir)}") {
       corpus(spark, sfDir)
         .select(col("vec_id"), col("q"), col("n2"),
           nearestCid(trainedCentroidLiteral(spark, sfDir),

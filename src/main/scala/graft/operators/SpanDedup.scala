@@ -68,7 +68,7 @@ object SpanDedup {
     * min), so [[dedupSpans]]'s `first_doc` projects from it exactly. */
   private def dupSpanAgg(spark: SparkSession, sfDir: String, w: Int): DataFrame =
     Materialize.memoized(spark,
-        s"span_agg_${w}_${Materialize.dirTag(sfDir)}") {
+        s"span_agg_${w}_${Materialize.dirTag(spark, sfDir)}") {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
         .select(col("doc_id"),

@@ -599,7 +599,7 @@ object TextAnalysis {
     // token explode + tf/df aggregations — the PageRank output-memo
     // billing policy)
     Materialize.memoized(spark,
-        s"keywords_${k}_${Materialize.dirTag(sfDir)}") {
+        s"keywords_${k}_${Materialize.dirTag(spark, sfDir)}") {
     val perDoc = docs(spark, sfDir)
       .select(col("source"), col("doc_id"),
         explode(TextOps.tokens(TextOps.normText(col("text")))).as("term"))
@@ -773,7 +773,7 @@ object TextAnalysis {
     * Output: one row per source pair sharing at least one shingle. */
   def sourceOverlap(spark: SparkSession, sfDir: String): DataFrame = {
     val perShingle = Materialize.memoized(spark,
-        s"source_overlap_sh_${Materialize.dirTag(sfDir)}") {
+        s"source_overlap_sh_${Materialize.dirTag(spark, sfDir)}") {
       DedupOps.signatures(spark, sfDir, keepHs = true)
         .select(col("doc_id"), col("hs"))
         .join(docs(spark, sfDir).select(col("doc_id"), col("source")), "doc_id")
@@ -784,7 +784,7 @@ object TextAnalysis {
     // combination explode + size joins previously re-ran for each of
     // source_overlap and sql_source_overlap
     Materialize.memoized(spark,
-        s"source_overlap_out_${Materialize.dirTag(sfDir)}") {
+        s"source_overlap_out_${Materialize.dirTag(spark, sfDir)}") {
       val sizes = perShingle.select(explode(col("ss")).as("source"))
         .groupBy(col("source")).agg(count(lit(1)).as("n"))
       val combos = flatten(transform(col("ss"), (x, i) =>
@@ -842,7 +842,7 @@ object TextAnalysis {
     * memo key so a runtime size override never serves a stale vocab. */
   private def topVocab(spark: SparkSession, sfDir: String): DataFrame = {
     val v = graft.GraftConf.vocabSize(spark)
-    Materialize.memoized(spark, s"vocab_${v}_${Materialize.dirTag(sfDir)}") {
+    Materialize.memoized(spark, s"vocab_${v}_${Materialize.dirTag(spark, sfDir)}") {
       termRows(spark, sfDir)
         .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("term").asc).limit(v)

@@ -51,7 +51,7 @@ object EventStream {
   def readEventsStream(spark: org.apache.spark.sql.SparkSession, dir: String,
                        maxFilesPerTrigger: Int = 1): DataFrame = {
     import org.apache.spark.sql.types._
-    val tsType = spark.read.parquet(dir).schema("ts").dataType
+    val tsType = graft.sources.Tables.parquet(spark, dir).schema("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),
       StructField("user_id", LongType), StructField("event_type", StringType),
