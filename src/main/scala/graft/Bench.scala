@@ -3,34 +3,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
     // benchmark under the same planning-time cartesian guard Verify runs
-    graft.plans.NoCartesianGuard.install(spark)
-    spark.conf.set(GraftConf.NoCartesianGuardKey, "true")
-    // optional session confs for scale experiments, same contract as
-    // BenchPair (Verify refuses oracle-pinned overrides; a bench run
-    // measures wall-clock, not oracle equality, so knobs are fair
-    // here — any override is recorded in the output JSON):
+    val spark = GraftSession.local(cpus)
+    // optional session confs for scale experiments, recorded in the
+    // output JSON (a bench run measures wall-clock, not oracle
+    // equality, so knobs are fair here):
     //   SPARK_GRAFT_CONF="spark.graft.ivf.k=auto"
-    // malformed segments (empty key, no '=') are dropped, not passed to
-    // spark.conf.set where an empty key throws and aborts the bench
-    val confOverrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.contains("=")).flatMap { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        if (k.trim.isEmpty) None
-        else {
-          spark.conf.set(k.trim, v.trim)
-          Some(k.trim + "=" + v.trim)
-        }
-      }
+    val confOverrides = GraftSession.applyConfOverrides(spark)
     // Box-speed control (r15, hardened r16): inter-round bench totals
     // have repeatedly drifted with HOST state, not code — r14
     // adjudicated a +26% drift by rebuilding r12's code, and r15
@@ -184,8 +164,7 @@ object Bench {
     // carried no evidence the env var reached Spark — emit the resolved
     // core count AND the master string the session actually runs with)
     val masterStr = spark.sparkContext.master
-    val cpusJson = scala.util.Try(cpus.trim.toInt.toString).getOrElse(q(cpus))
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"master":${q(masterStr)},"errors":$errs,"conf":$conf,"cpu_probe":$probeJson,"exact_baseline":$exactJson,"build_phase":$buildJson,"queries":$qs,"queries_pass1":${passMap(pass1)},"queries_pass2":${passMap(pass2)},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"master":${q(masterStr)},"errors":$errs,"conf":$conf,"cpu_probe":$probeJson,"exact_baseline":$exactJson,"build_phase":$buildJson,"queries":$qs,"queries_pass1":${passMap(pass1)},"queries_pass2":${passMap(pass2)},"sf":"$sfDir"}"""
     println(json)
     // Also persist to the repo: the driver captures the stdout tail,
     // which truncates the per-query map once the registry is this big

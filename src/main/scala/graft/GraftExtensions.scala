@@ -1,110 +1,97 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{AnnBuckets, DotLong, IvfProbes, TokenCount}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumns.wrongNumArgs
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions._
+import graft.plans.NoCartesianGuard
 
 /** Session-extensions installer: makes the library's native expressions
   * AND its optimizer rule available to ANY session (including pure-SQL
   * users) via `--conf spark.sql.extensions=graft.GraftExtensions` — the
   * standard deployment path for custom Catalyst surface on a cluster.
-  * The programmatic twins are `DotLong.register(spark)` /
-  * `AnnBuckets.register(spark)` / `NoCartesianGuard.install(spark)` for
-  * sessions built in code. The injected rule
+  * Sessions built in code get the same [[GraftExtensions.Functions]]
+  * table and rule from [[GraftExtensions.install]]. The injected rule
   * ([[graft.plans.NoCartesianGuard]]) is opt-in by conf and trivially
   * result-invariant: it fails runaway cartesian plans at optimization
   * time, it never rewrites them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(graft.plans.NoCartesianGuard(_))
-    ext.injectFunction((
-      FunctionIdentifier("dot_long"),
-      new ExpressionInfo(classOf[DotLong].getName, "dot_long"),
-      (exprs: Seq[Expression]) => DotLong(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("ann_buckets"),
-      new ExpressionInfo(classOf[AnnBuckets].getName, "ann_buckets"),
-      (exprs: Seq[Expression]) => AnnBuckets(exprs.head, exprs(1), exprs(2), exprs(3))))
-    ext.injectFunction((
-      FunctionIdentifier("ivf_probes"),
-      new ExpressionInfo(classOf[IvfProbes].getName, "ivf_probes"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 4, "ivf_probes takes (cents, q, n2, p)")
-        IvfProbes(exprs.head, exprs(1), exprs(2), exprs(3) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"ivf_probes probe count must be an integer literal, got $other")
-        })
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
-      (exprs: Seq[Expression]) => TokenCount(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("quantize_long"),
-      new ExpressionInfo(classOf[graft.functions.QuantizeLong].getName, "quantize_long"),
-      (exprs: Seq[Expression]) => graft.functions.QuantizeLong(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("int8_codes"),
-      new ExpressionInfo(classOf[graft.functions.Int8Codes].getName, "int8_codes"),
-      (exprs: Seq[Expression]) => graft.functions.Int8Codes(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hash60"),
-      new ExpressionInfo(classOf[graft.functions.Hash60].getName, "hash60"),
-      (exprs: Seq[Expression]) => graft.functions.Hash60(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hash60b"),
-      new ExpressionInfo(classOf[graft.functions.Hash60B].getName, "hash60b"),
-      (exprs: Seq[Expression]) => graft.functions.Hash60B(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("hash120"),
-      new ExpressionInfo(classOf[graft.functions.Hash120].getName, "hash120"),
-      (exprs: Seq[Expression]) => graft.functions.Hash120(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_hash60"),
-      new ExpressionInfo(classOf[graft.functions.NgramHash60].getName, "ngram_hash60"),
-      (exprs: Seq[Expression]) => graft.functions.NgramHash60(exprs.head, intLit(exprs(1), "ngram_hash60 k"))))
-    ext.injectFunction((
-      FunctionIdentifier("skipgram_pairs"),
-      new ExpressionInfo(classOf[graft.functions.SkipgramPairs].getName, "skipgram_pairs"),
-      (exprs: Seq[Expression]) => graft.functions.SkipgramPairs(exprs.head, intLit(exprs(1), "skipgram_pairs w"))))
-    ext.injectFunction((
-      FunctionIdentifier("tokens_ws"),
-      new ExpressionInfo(classOf[graft.functions.TokensWs].getName, "tokens_ws"),
-      (exprs: Seq[Expression]) => graft.functions.TokensWs(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("term_freqs"),
-      new ExpressionInfo(classOf[graft.functions.TermFreqs].getName, "term_freqs"),
-      (exprs: Seq[Expression]) => graft.functions.TermFreqs(exprs.head, strArrayLit(exprs(1), "term_freqs terms"))))
-    ext.injectFunction((
-      FunctionIdentifier("count_in"),
-      new ExpressionInfo(classOf[graft.functions.CountIn].getName, "count_in"),
-      (exprs: Seq[Expression]) => graft.functions.CountIn(exprs.head, strArrayLit(exprs(1), "count_in words"))))
-    ext.injectFunction((
-      FunctionIdentifier("filter_in"),
-      new ExpressionInfo(classOf[graft.functions.FilterIn].getName, "filter_in"),
-      (exprs: Seq[Expression]) => graft.functions.FilterIn(exprs.head, strArrayLit(exprs(1), "filter_in words"))))
+    ext.injectOptimizerRule(NoCartesianGuard(_))
+    GraftExtensions.Functions.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
+  }
+}
+
+object GraftExtensions {
+
+  /** One native SQL function. [[builder]] rejects a call with the wrong
+    * argument count with Spark's `WRONG_NUM_ARGS` analysis error, so
+    * `build` always sees exactly `arity` resolved arguments. Scala code
+    * builds these expressions directly (`TextOps`, `Similarity`, ...);
+    * the table serves SQL callers. */
+  final case class NativeFunction(name: String, arity: Int, cls: Class[_ <: Expression])(
+      build: Seq[Expression] => Expression) {
+    val id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
+    val builder: Seq[Expression] => Expression = args =>
+      if (args.length != arity) throw wrongNumArgs(name, arity, args.length)
+      else build(args)
   }
 
-  private def strArrayLit(e: Expression, what: String): Seq[String] = {
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    e match {
-      case f if f.resolved && f.foldable &&
-          f.dataType.isInstanceOf[ArrayType] &&
-          f.dataType.asInstanceOf[ArrayType].elementType == StringType =>
-        f.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toArray[org.apache.spark.unsafe.types.UTF8String](StringType).map(_.toString).toSeq
-      case other => throw new IllegalArgumentException(
-        s"$what must be a literal ARRAY<STRING>, got $other")
-    }
+  /** Every native function graft exposes to SQL. */
+  val Functions: Seq[NativeFunction] = Seq(
+    NativeFunction("hash60", 1, classOf[Hash60])(a => Hash60(a(0))),
+    NativeFunction("hash60b", 1, classOf[Hash60B])(a => Hash60B(a(0))),
+    NativeFunction("hash120", 1, classOf[Hash120])(a => Hash120(a(0))),
+    NativeFunction("ngram_hash60", 2, classOf[NgramHash60])(a =>
+      NgramHash60(a(0), intLit(a(1), "ngram_hash60 k"))),
+    NativeFunction("skipgram_pairs", 2, classOf[SkipgramPairs])(a =>
+      SkipgramPairs(a(0), intLit(a(1), "skipgram_pairs w"))),
+    NativeFunction("tokens_ws", 1, classOf[TokensWs])(a => TokensWs(a(0))),
+    NativeFunction("term_freqs", 2, classOf[TermFreqs])(a =>
+      TermFreqs(a(0), stringsLit(a(1), "term_freqs terms"))),
+    NativeFunction("count_in", 2, classOf[CountIn])(a =>
+      CountIn(a(0), stringsLit(a(1), "count_in words"))),
+    NativeFunction("filter_in", 2, classOf[FilterIn])(a =>
+      FilterIn(a(0), stringsLit(a(1), "filter_in words"))),
+    NativeFunction("token_count", 1, classOf[TokenCount])(a => TokenCount(a(0))),
+    NativeFunction("quantize_long", 1, classOf[QuantizeLong])(a => QuantizeLong(a(0))),
+    NativeFunction("int8_codes", 1, classOf[Int8Codes])(a => Int8Codes(a(0))),
+    NativeFunction("dot_long", 2, classOf[DotLong])(a => DotLong(a(0), a(1))),
+    NativeFunction("ann_buckets", 4, classOf[AnnBuckets])(a => AnnBuckets(a(0), a(1), a(2), a(3))),
+    NativeFunction("ivf_probes", 4, classOf[IvfProbes])(a =>
+      IvfProbes(a(0), a(1), a(2), intLit(a(3), "ivf_probes probe count"))),
+    NativeFunction("ed1", 2, classOf[EditWithin1])(a => EditWithin1(a(0), a(1))))
+
+  /** Install [[Functions]] and the guard rule on a session built in code
+    * (the extensions class covers cluster-deployed sessions). Idempotent. */
+  def install(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    Functions.filterNot(f => reg.functionExists(f.id))
+      .foreach(f => reg.registerFunction(f.id, f.info, f.builder))
+    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[NoCartesianGuard]))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ NoCartesianGuard(spark)
   }
 
   private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
+    case Literal(v: Int, _) => v
+    case Literal(v: Long, _) => v.toInt
     case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
+  }
+
+  /** A resolved foldable ARRAY<STRING> argument (a CreateArray of
+    * literals before constant folding, a Literal after). */
+  private def stringsLit(e: Expression, what: String): Seq[String] = e match {
+    case f if f.resolved && f.foldable && f.dataType.isInstanceOf[ArrayType] &&
+        f.dataType.asInstanceOf[ArrayType].elementType == StringType =>
+      f.eval(null).asInstanceOf[ArrayData].toArray[UTF8String](StringType).map(_.toString).toSeq
+    case other => throw new IllegalArgumentException(
+      s"$what must be a literal ARRAY<STRING>, got $other")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query timing probe for local iteration: warms the JVM, then runs
   * each named query 3× with the cache cleared between runs (true
   * recompute, not cache reads). Finer-grained than Bench (which runs
@@ -14,18 +12,8 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // probe under the same armed cartesian guard Verify and Bench use
-    graft.plans.NoCartesianGuard.install(spark)
-    spark.conf.set(GraftConf.NoCartesianGuardKey, "true")
+    val spark = GraftSession.local()
     val names = if (args.isEmpty) Seq("dedup_simhash_pairs") else args.toSeq
     val unknown = names.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,21 +10,11 @@ object Verify {
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")} — a typo here would verify nothing and exit 0")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Arm the planning-time cartesian guard for the whole dump: every
-    // registered query is thereby certified guard-clean at OPTIMIZATION
-    // time (a runaway join would fail its dump and the round), on top of
-    // the physical-plan audit in PropertiesSpec.
-    graft.plans.NoCartesianGuard.install(spark)
-    spark.conf.set(GraftConf.NoCartesianGuardKey, "true")
+    // The session arms the planning-time cartesian guard for the whole
+    // dump: every registered query is thereby certified guard-clean at
+    // OPTIMIZATION time (a runaway join would fail its dump and the
+    // round), on top of the physical-plan audit in PropertiesSpec.
+    val spark = GraftSession.local()
     // Overrides that change only the Spark side while the oracle SQL
     // stays pinned would report false mismatches — refuse rather than
     // mislead. The ANN plane count (oracle derives it from a live

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -164,14 +162,4 @@ case class AnnBuckets(vec: Expression, signsExpr: Expression,
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): AnnBuckets =
     copy(vec = newChildren(0), signsExpr = newChildren(1),
       planesExpr = newChildren(2), tablesExpr = newChildren(3))
-}
-
-object AnnBuckets {
-  /** Register `ann_buckets` in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("ann_buckets"),
-      new ExpressionInfo(classOf[AnnBuckets].getName, "ann_buckets"),
-      (exprs: Seq[Expression]) => AnnBuckets(exprs.head, exprs(1), exprs(2), exprs(3)))
-  }
 }

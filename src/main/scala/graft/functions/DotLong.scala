@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -88,15 +86,4 @@ case class DotLong(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotLong =
     copy(left = newLeft, right = newRight)
-}
-
-object DotLong {
-  /** Register `dot_long` in the session's function registry so it is
-    * callable via `call_function` / SQL. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_long"),
-      new ExpressionInfo(classOf[DotLong].getName, "dot_long"),
-      (exprs: Seq[Expression]) => DotLong(exprs.head, exprs(1)))
-  }
 }

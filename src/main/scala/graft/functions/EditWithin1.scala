@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -99,17 +97,5 @@ object EditWithin1 {
       while (s < ns - p && eqSL(ns - 1 - s, nl - 1 - s)) s += 1
       if (p + s >= ns) 1 else -1
     }
-  }
-
-  /** Register `ed1` for SQL callers. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("ed1"),
-      new ExpressionInfo(classOf[EditWithin1].getName, "ed1"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"ed1 requires exactly 2 arguments, got ${exprs.length}")
-        EditWithin1(exprs.head, exprs(1))
-      })
   }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -106,37 +105,8 @@ object HashKernels {
       s"(($d[10] & 0xffL) << 32) | (($d[11] & 0xffL) << 24) | (($d[12] & 0xffL) << 16) | " +
       s"(($d[13] & 0xffL) << 8) | ($d[14] & 0xffL)) & ((1L << 60) - 1))"
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("hash60"))) {
-      reg.registerFunction(
-        FunctionIdentifier("hash60"),
-        new ExpressionInfo(classOf[Hash60].getName, "hash60"),
-        (exprs: Seq[Expression]) => Hash60(exprs.head))
-      reg.registerFunction(
-        FunctionIdentifier("hash60b"),
-        new ExpressionInfo(classOf[Hash60B].getName, "hash60b"),
-        (exprs: Seq[Expression]) => Hash60B(exprs.head))
-      reg.registerFunction(
-        FunctionIdentifier("hash120"),
-        new ExpressionInfo(classOf[Hash120].getName, "hash120"),
-        (exprs: Seq[Expression]) => Hash120(exprs.head))
-      reg.registerFunction(
-        FunctionIdentifier("ngram_hash60"),
-        new ExpressionInfo(classOf[NgramHash60].getName, "ngram_hash60"),
-        (exprs: Seq[Expression]) => NgramHash60(exprs.head, intLit(exprs(1), "ngram_hash60 k")))
-      reg.registerFunction(
-        FunctionIdentifier("skipgram_pairs"),
-        new ExpressionInfo(classOf[SkipgramPairs].getName, "skipgram_pairs"),
-        (exprs: Seq[Expression]) => SkipgramPairs(exprs.head, intLit(exprs(1), "skipgram_pairs w")))
-    }
-  }
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
-  }
+  /** [[graft.GraftExtensions.install]], which registers these kernels. */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 }
 
 /** `hash60(s)` == `CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)`. */

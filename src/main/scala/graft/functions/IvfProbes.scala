@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
@@ -315,24 +313,4 @@ case class IvfProbes(first: Expression, second: Expression, third: Expression, p
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): IvfProbes =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object IvfProbes {
-  /** Register `ivf_probes(cents, q, n2, p)` (p a positive integer
-    * literal) in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("ivf_probes"),
-      new ExpressionInfo(classOf[IvfProbes].getName, "ivf_probes"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 4, "ivf_probes takes (cents, q, n2, p)")
-        val p = exprs(3) match {
-          case Literal(v: Int, _) => v
-          case Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"ivf_probes probe count must be an integer literal, got $other")
-        }
-        IvfProbes(exprs.head, exprs(1), exprs(2), p)
-      })
-  }
 }

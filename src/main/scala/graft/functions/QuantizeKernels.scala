@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
@@ -49,17 +47,6 @@ object QuantizeKernels {
       else java.math.BigDecimal.valueOf(m)
         .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
     r.toLong
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("quantize_long"),
-      new ExpressionInfo(classOf[QuantizeLong].getName, "quantize_long"),
-      (exprs: Seq[Expression]) => QuantizeLong(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("int8_codes"),
-      new ExpressionInfo(classOf[Int8Codes].getName, "int8_codes"),
-      (exprs: Seq[Expression]) => Int8Codes(exprs.head))
   }
 }
 

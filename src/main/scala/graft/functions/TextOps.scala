@@ -1,13 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NativeColumns.{column, expression}
 
 /** Column-level text primitives shared by the dedup / text-analysis
   * operators. Everything here composes Spark built-ins (codegen'd or
-  * higher-order expressions) — no UDFs — and every function that feeds a
-  * DuckDB oracle has an exact SQL twin (identical md5 / integer
-  * arithmetic on both engines).
+  * higher-order expressions) or graft's native kernels — no UDFs — and
+  * every function that feeds a DuckDB oracle has an exact SQL twin
+  * (identical md5 / integer arithmetic on both engines).
   */
 object TextOps {
 
@@ -18,19 +19,12 @@ object TextOps {
     * the filter is a CodegenFallback higher-order function — one
     * interpreted boxed lambda eval per token of every document
     * (value-identical, spec-pinned). */
-  def tokens(text: Column): Column =
-    SparkSession.getActiveSession match {
-      case Some(sp) =>
-        TokenKernels.register(sp)
-        call_function("tokens_ws", text)
-      case None => filter(split(text, " "), t => t =!= lit(""))
-    }
+  def tokens(text: Column): Column = column(TokensWs(expression(text)))
 
   /** Native zero-allocation count of [[tokens]] — the codegen'd
-    * [[TokenCount]] kernel (callers register it per session; every
-    * TextAnalysis/Packing operator does). Identical value to
-    * `size(tokens(text))`, spec-pinned. */
-  def tokenCount(text: Column): Column = call_function("token_count", text)
+    * [[TokenCount]] kernel. Identical value to `size(tokens(text))`,
+    * spec-pinned. */
+  def tokenCount(text: Column): Column = column(TokenCount(expression(text)))
 
   /** Canonical text normalization for exact dedup: lowercase, collapse
     * every non-letter/non-digit run to a single space, trim. The classes
@@ -71,12 +65,7 @@ object TextOps {
     * [[CountIn]] kernel (the builtin form pays an interpreted
     * ArrayFilter lambda per token; value-identical, spec-pinned). */
   def stopwordHits(toks: Column, words: Seq[String]): Column =
-    SparkSession.getActiveSession match {
-      case Some(sp) =>
-        TokenKernels.register(sp)
-        call_function("count_in", toks, array(words.map(lit): _*))
-      case None => size(filter(toks, t => t.isin(words.map(w => w: Any): _*)))
-    }
+    column(CountIn(expression(toks), words))
 
   /** Matched-character mass of variable-length character n-grams (the
     * profile words themselves) in the lowercased text: for each gram,
@@ -143,17 +132,6 @@ object TextOps {
     s"""list_transform(range(0, greatest(len($t) - ${k - 1}, 0)),
        | i -> struct_pack(pos := i, s := concat_ws(' ', ${(1 to k).map(j => s"$t[i+$j]").mkString(", ")})))""".stripMargin.replace("\n", "")
 
-  /** Route a hash through its native kernel when a session is active
-    * (the normal operator path — registration is idempotent), else
-    * through the composed-builtin fallback. Both forms compute the
-    * identical value ([[HashKernels]] doc; spec-pinned), so the choice
-    * can never change a result — only the per-row cost. */
-  private def hashKernel(fnName: String, fallback: => Column, args: Column*): Column =
-    SparkSession.getActiveSession match {
-      case Some(sp) => HashKernels.register(sp); call_function(fnName, args: _*)
-      case None => fallback
-    }
-
   /** Portable 60-bit string hash: first 15 hex chars of md5, as a long.
     * Identical in DuckDB: `CAST(concat('0x', substr(md5(s),1,15)) AS BIGINT)`.
     * (md5 is bytewise-identical across engines; 15 hex chars keep the
@@ -162,8 +140,7 @@ object TextOps {
     * materializes the hex digest string and radix-parses it through
     * two more strings per row; the kernel reads the 60 bits off the
     * digest bytes (value-identical, spec-pinned). */
-  def hash60(s: Column): Column =
-    hashKernel("hash60", conv(substring(md5(s), 1, 15), 16, 10).cast("long"), s)
+  def hash60(s: Column): Column = column(Hash60(expression(s)))
 
   /** SQL twin of [[hash60]]. */
   def hash60Sql(s: String): String =
@@ -174,8 +151,7 @@ object TextOps {
     * hash-keyed operator to 120 bits at zero extra hashing cost (the
     * digest is computed once; common-subexpression elimination shares it
     * between [[hash60]] and this). */
-  def hash60b(s: Column): Column =
-    hashKernel("hash60b", conv(substring(md5(s), 16, 15), 16, 10).cast("long"), s)
+  def hash60b(s: Column): Column = column(Hash60B(expression(s)))
 
   /** Both 60-bit halves from ONE digest as a struct<h1, h2> — for the
     * dual-hash sites (exact dedup, versioning, streaming content
@@ -185,9 +161,7 @@ object TextOps {
     * here: consumers project `.getField("h1"/"h2")` of two IDENTICAL
     * hash120 trees, which codegen subexpression elimination collapses
     * to one digest per row. */
-  def hash120(s: Column): Column =
-    hashKernel("hash120",
-      struct(hash60(s).as("h1"), hash60b(s).as("h2")), s)
+  def hash120(s: Column): Column = column(Hash120(expression(s)))
 
   /** All k-token window hashes of a token array in ONE array pass —
     * `transform(ngramIndex(t,k), i -> hash60(ngramAt(t,i,k)))` without
@@ -196,9 +170,7 @@ object TextOps {
     * element j is the window starting at 0-based position j, so
     * `posexplode` of this column replaces `explode(ngramIndex)` +
     * scalar hash exactly. */
-  def ngramHash60(t: Column, k: Int): Column =
-    hashKernel("ngram_hash60",
-      transform(ngramIndex(t, k), i => hash60(ngramAt(t, i, k))), t, lit(k))
+  def ngramHash60(t: Column, k: Int): Column = column(NgramHash60(expression(t), k))
 
   /** SQL twin of [[hash60b]]. */
   def hash60bSql(s: String): String =

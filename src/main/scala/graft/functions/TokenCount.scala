@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -75,12 +74,6 @@ case class TokenCount(child: Expression) extends UnaryExpression {
 }
 
 object TokenCount {
-  /** Register `token_count` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
-      (exprs: Seq[Expression]) => TokenCount(exprs.head))
-  }
+  /** [[graft.GraftExtensions.install]], which registers `token_count`. */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 }

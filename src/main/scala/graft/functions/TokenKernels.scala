@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -42,40 +41,8 @@ object TokenKernels {
         s"$fn requires ARRAY<STRING>, got ${other.sql}")
     }
 
-  /** Extract the literal string array of a `terms` argument (a
-    * Literal after constant folding, a CreateArray of literals before
-    * it — any resolved foldable ARRAY<STRING> works). */
-  private def termsLit(e: Expression, what: String): Seq[String] = e match {
-    case f if f.resolved && f.foldable &&
-        f.dataType.isInstanceOf[ArrayType] &&
-        f.dataType.asInstanceOf[ArrayType].elementType == StringType =>
-      f.eval(null).asInstanceOf[ArrayData]
-        .toArray[UTF8String](StringType).map(_.toString).toSeq
-    case other => throw new IllegalArgumentException(
-      s"$what must be a literal ARRAY<STRING>, got $other")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("tokens_ws"))) {
-      reg.registerFunction(
-        FunctionIdentifier("tokens_ws"),
-        new ExpressionInfo(classOf[TokensWs].getName, "tokens_ws"),
-        (exprs: Seq[Expression]) => TokensWs(exprs.head))
-      reg.registerFunction(
-        FunctionIdentifier("term_freqs"),
-        new ExpressionInfo(classOf[TermFreqs].getName, "term_freqs"),
-        (exprs: Seq[Expression]) => TermFreqs(exprs.head, termsLit(exprs(1), "term_freqs terms")))
-      reg.registerFunction(
-        FunctionIdentifier("count_in"),
-        new ExpressionInfo(classOf[CountIn].getName, "count_in"),
-        (exprs: Seq[Expression]) => CountIn(exprs.head, termsLit(exprs(1), "count_in words")))
-      reg.registerFunction(
-        FunctionIdentifier("filter_in"),
-        new ExpressionInfo(classOf[FilterIn].getName, "filter_in"),
-        (exprs: Seq[Expression]) => FilterIn(exprs.head, termsLit(exprs(1), "filter_in words")))
-    }
-  }
+  /** [[graft.GraftExtensions.install]], which registers these kernels. */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 }
 
 /** `tokens_ws(text)` == `filter(split(text, ' '), t -> t <> '')` as one

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NativeColumns.{column, expression}
 import graft.functions.TextOps
 import graft.sources.Tables
 
@@ -53,20 +54,9 @@ object CoOccur {
     * (`skipgram_pairs` 6.1 s at 32 cores vs 1.3 s at 8). The kernel
     * emits the identical pair array (center position ascending,
     * context offset ascending; < 2 tokens ⇒ empty) in one generated
-    * loop. Falls back to the HOF form only when no session is active
-    * (value-identical either way, spec-pinned). */
-  private def pairStructs(toks: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(sp) =>
-        graft.functions.HashKernels.register(sp)
-        call_function("skipgram_pairs", toks, lit(Window))
-      case None =>
-        when(size(toks) >= 2,
-          flatten(transform(sequence(lit(1), size(toks)), i =>
-            transform(slice(toks, i + 1, lit(Window)), x =>
-              struct(element_at(toks, i).as("center"), x.as("context"))))))
-          .otherwise(array().cast("array<struct<center:string,context:string>>"))
-    }
+    * loop (value-identical, spec-pinned). */
+  private[graft] def pairStructs(toks: Column): Column =
+    column(graft.functions.SkipgramPairs(expression(toks), Window))
 
   /** Spec hook: the per-document pair generator over a text column. */
   private[graft] def testPairStructs(text: Column): Column =

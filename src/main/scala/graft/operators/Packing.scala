@@ -34,7 +34,6 @@ object Packing {
     * slim 8-byte-key semi-join before any token work). */
   def packSequences(spark: SparkSession, sfDir: String,
       onlyDocs: Option[DataFrame] = None): DataFrame = {
-    graft.functions.TokenCount.register(spark)
     val base = onlyDocs.foldLeft(Tables.documents(spark, sfDir)) {
       (d, ids) => d.join(ids.select(col("doc_id")), Seq("doc_id"), "left_semi")
     }
@@ -99,7 +98,6 @@ object Packing {
     * Scale: one projection + one aggregation keyed by the bucket id —
     * the same single-shuffle shape as every stats query here. */
   def lengthBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TokenCount.register(spark)
     val nToks = TextOps.tokenCount(col("text")).cast("long")
     Tables.documents(spark, sfDir)
       .where(col("text").isNotNull)

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NativeColumns.{column, expression}
+import graft.functions.Int8Codes
 import graft.sources.Tables
 
 /** Symmetric int8 embedding quantization — the storage/serving
@@ -30,7 +32,6 @@ object Quantization {
     // higher-order lambda — value-identical by construction (see the
     // kernel doc); the maxabs/scale column keeps its HOF form (it is
     // evaluated once per row and is not on the per-pair hot path)
-    graft.functions.QuantizeKernels.register(spark)
     val e = col("embedding").cast("array<double>")
     Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), e.as("e"))
@@ -38,7 +39,7 @@ object Quantization {
         array_max(transform(col("e"), x => abs(x))).as("maxabs"))
       .select(col("vec_id"),
         (col("maxabs") / 127).as("scale"),
-        call_function("int8_codes", col("e")).as("q"))
+        column(Int8Codes(expression(col("e")))).as("q"))
       .select(col("vec_id"), col("scale"),
         coalesce(aggregate(col("q"), lit(0L), (acc, x) => acc + x), lit(0L)).as("q_sum"),
         coalesce(aggregate(transform(col("q"), (x, i) => x * (i + 1).cast("long")),
@@ -68,19 +69,16 @@ object Quantization {
     // kernel is a primitive loop). Values are identical: both forms are
     // the exact int64 sum of elementwise products in ascending index
     // order, and null elements contribute 0 in both.
-    graft.functions.DotLong.register(spark)
-    graft.functions.QuantizeKernels.register(spark)
-    def dot8(a: Column, b: Column): Column = call_function("dot_long", a, b)
     val q8frame = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("e"))
       .select(col("vec_id"), col("label"),
-        call_function("int8_codes", col("e")).as("q8"))
-      .withColumn("n8", dot8(col("q8"), col("q8")))
+        column(Int8Codes(expression(col("e")))).as("q8"))
+      .withColumn("n8", Similarity.dotQ(col("q8"), col("q8")))
     val query = q8frame.where(col("vec_id") === Similarity.QueryVecId)
       .select(col("q8").as("qq8"), col("n8").as("qn8"))
     q8frame.join(broadcast(query))
       .where(col("vec_id") =!= Similarity.QueryVecId && col("n8") > 0 && col("qn8") > 0)
-      .withColumn("dot8", dot8(col("q8"), col("qq8")))
+      .withColumn("dot8", Similarity.dotQ(col("q8"), col("qq8")))
       .select(col("vec_id"), col("label"),
         (col("dot8").cast("double") /
           (sqrt(col("n8").cast("double")) * sqrt(col("qn8").cast("double"))))

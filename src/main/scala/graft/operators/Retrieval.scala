@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.TextOps
+import org.apache.spark.sql.graft.NativeColumns.{column, expression}
+import graft.functions.{EditWithin1, FilterIn, TermFreqs, TextOps}
 import graft.sources.Tables
 
 /** Retrieval and entity-resolution operators for a training-data
@@ -95,8 +96,7 @@ object Retrieval {
     // the |terms| element_at projections of the same kernel tree
     // collapse to one eval under codegen subexpression elimination.
     // Values identical (exact integer counts, spec-pinned).
-    graft.functions.TokenKernels.register(docs.sparkSession)
-    val tfc = call_function("term_freqs", col("toks"), array(terms.map(lit): _*))
+    val tfc = column(TermFreqs(expression(col("toks")), terms))
     docs.where(col("text").isNotNull)
       .select(col("doc_id"),
         TextOps.tokens(TextOps.normText(col("text"))).as("toks"))
@@ -411,13 +411,11 @@ object Retrieval {
     val docs = Tables.documents(spark, sfDir)
     // matched-token pre-filter via the native filter_in kernel (the
     // |terms|-way OR lambda was an interpreted ArrayFilter per token)
-    graft.functions.TokenKernels.register(spark)
     val base = docs.where(col("text").isNotNull)
       .select(col("doc_id"),
         TextOps.tokens(TextOps.normText(col("text"))).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        call_function("filter_in", col("toks"),
-          array(Bm25AllTerms.map(lit): _*)).as("matched"))
+        column(FilterIn(expression(col("toks")), Bm25AllTerms)).as("matched"))
     // 1-row corpus stats over ALL docs (nd, tt) — same aggregate the
     // unrolled path broadcasts.
     val stats = base.agg(count(lit(1)).as("nd"), sum(col("dl")).as("tt"))
@@ -476,8 +474,7 @@ object Retrieval {
     import org.apache.spark.sql.expressions.Window
     val chunks = Chunking.chunkCols(Tables.documents(spark, sfDir))
     // per-chunk tf via the term_freqs kernel (see bm25PerDocFor)
-    graft.functions.TokenKernels.register(spark)
-    val tfc = call_function("term_freqs", col("toks"), array(Bm25Terms.map(lit): _*))
+    val tfc = column(TermFreqs(expression(col("toks")), Bm25Terms))
     val perChunk = chunks
       .select(col("doc_id"), col("chunk_id"),
         TextOps.tokens(TextOps.normText(col("chunk_text"))).as("toks"))
@@ -583,7 +580,6 @@ object Retrieval {
     * every candidate (956 k). 0 is impossible on distinct keys, so
     * surviving dist ≡ 1, the unbounded-oracle value. */
   def fuzzyPairsFromVariants(variants: DataFrame): DataFrame = {
-    graft.functions.EditWithin1.register(variants.sparkSession)
     // per-side column renames (not plan aliases): a table-backed input
     // (e.g. the stream-accumulated store) carries the same attribute
     // ids on both sides of the self-join, and alias-qualified refs
@@ -592,7 +588,8 @@ object Retrieval {
     val b = variants.select(col("name").as("name_b"), col("v").as("vb"))
     a.join(b, col("va") === col("vb") && col("name_a") < col("name_b"))
       .select(col("name_a"), col("name_b"),
-        call_function("ed1", col("name_a"), col("name_b")).cast("long").as("dist"))
+        column(EditWithin1(expression(col("name_a")), expression(col("name_b"))))
+          .cast("long").as("dist"))
       .where(col("dist") >= 0)
       .distinct()
   }

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NativeColumns.{column, expression}
 import graft.functions.DotLong
 import graft.sources.Tables
 
@@ -95,16 +97,14 @@ object Similarity {
     * .cast("long"))` higher-order form (same widen, same BigDecimal
     * HALF_UP round, same cast, nulls preserved), but one primitive
     * loop instead of an interpreted per-element `Round` that allocates
-    * a BigDecimal per element per row on every corpus scan. Callers
-    * must have [[graft.functions.QuantizeKernels.register]]ed the
-    * session ([[corpus]] does). */
+    * a BigDecimal per element per row on every corpus scan. */
   private[graft] def quantize(v: Column): Column =
-    call_function("quantize_long", v)
+    column(graft.functions.QuantizeLong(expression(v)))
 
   /** Exact integer dot product of two quantized vectors — the native
-    * codegen'd [[DotLong]] kernel ([[corpus]] registers it). */
+    * codegen'd [[DotLong]] kernel. */
   private[graft] def dotQ(a: Column, b: Column): Column =
-    call_function("dot_long", a, b)
+    column(DotLong(expression(a), expression(b)))
 
   /** Cosine from a precomputed integer dot and two precomputed integer
     * squared norms: a fixed IEEE sqrt/multiply/divide tree. */
@@ -145,10 +145,6 @@ object Similarity {
     Tables.listing(spark, s"$sfDir/embeddings.parquet").bytes
 
   private[graft] def corpus(spark: SparkSession, sfDir: String): DataFrame = {
-    DotLong.register(spark)
-    graft.functions.AnnBuckets.register(spark)
-    graft.functions.IvfProbes.register(spark)
-    graft.functions.QuantizeKernels.register(spark)
     val raw = Tables.embeddings(spark, sfDir)
     val target = spark.sparkContext.defaultParallelism
     val balanced =
@@ -188,7 +184,8 @@ object Similarity {
     // else-branch → all bits 0), which the SQL twins still compute; the
     // kernel itself returns null for null input, so coalesce here
     coalesce(
-      call_function("ann_buckets", q, lit(flat.toArray), lit(planes), lit(AnnTables)),
+      column(graft.functions.AnnBuckets(expression(q), expression(lit(flat.toArray)),
+        Literal(planes), Literal(AnnTables))),
       array((0 until AnnTables).map(_ => lit(0L)): _*))
   }
 
@@ -196,7 +193,6 @@ object Similarity {
     * Like the dedup band rows, these deliberately carry NOTHING but the
     * id and the key: bucket joins must never ship vector payloads. */
   private[graft] def bucketRows(embQ: DataFrame, planes: Int): DataFrame = {
-    graft.functions.AnnBuckets.register(embQ.sparkSession)
     embQ.select(col("vec_id"),
       posexplode(bucketArray(col("q"), planes)).as(Seq("tbl", "bucket")))
   }
@@ -394,7 +390,7 @@ object Similarity {
     * leak into an argmin). The coalesce preserves the fold's
     * empty/degenerate result: no valid centroid → Long.MaxValue. */
   private[graft] def nearestCid(cents: Column, q: Column, n2: Column): Column =
-    coalesce(element_at(call_function("ivf_probes", cents, q, n2, lit(1)), 1),
+    coalesce(element_at(probeCids(cents, q, n2, 1), 1),
       lit(Long.MaxValue))
 
   /** The query's nProbes nearest cell ids, nearest first — the same
@@ -402,7 +398,7 @@ object Similarity {
     * slice rank on null-free centroid arrays, which [[centsLit]]
     * always produces). */
   private[graft] def probeCids(cents: Column, q: Column, n2: Column, nProbes: Int): Column =
-    call_function("ivf_probes", cents, q, n2, lit(nProbes))
+    column(graft.functions.IvfProbes(expression(cents), expression(q), expression(n2), nProbes))
 
   def ivfTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = corpus(spark, sfDir)

@@ -19,10 +19,7 @@ import graft.sources.Tables
   */
 object TextAnalysis {
 
-  private def docs(spark: SparkSession, sfDir: String) = {
-    graft.functions.TokenCount.register(spark)
-    Tables.documents(spark, sfDir)
-  }
+  private def docs(spark: SparkSession, sfDir: String) = Tables.documents(spark, sfDir)
 
   /** Per-language corpus statistics: doc count, token totals, exact
     * integer sums with one final IEEE division for the averages (so both

@@ -27,8 +27,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * plan untouched.
   *
   * Deployment: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * injects it into every session's optimizer; [[NoCartesianGuard.install]]
-  * is the programmatic twin for sessions built in code.
+  * injects it into every session's optimizer; sessions built in code get
+  * it, with the native functions, from [[graft.GraftExtensions.install]].
   */
 case class NoCartesianGuard(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
@@ -96,11 +96,6 @@ case class NoCartesianGuard(spark: SparkSession)
 }
 
 object NoCartesianGuard {
-  /** Install on an existing session (the extensions path covers
-    * cluster-deployed sessions; this covers code-built ones).
-    * Idempotent. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[NoCartesianGuard]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ NoCartesianGuard(spark)
+  /** [[graft.GraftExtensions.install]], which installs this rule. */
+  def install(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 }

@@ -67,8 +67,6 @@ object EmbedStream {
       queryFilter: org.apache.spark.sql.Column =
         col("vec_id") % Similarity.KnnQueryMod === 0): Dataset[KnnPrediction] = {
     import spark.implicits._
-    graft.functions.DotLong.register(spark)
-    graft.functions.QuantizeKernels.register(spark)
     val k = graft.GraftConf.knnK(spark)
     val cents = Similarity.trainedCentroidLiteral(spark, sfDir)
     val index = Similarity.knnCellIndex(spark, sfDir)
@@ -129,9 +127,6 @@ object EmbedStream {
   def pqEncodeStream(embStream: DataFrame, spark: SparkSession,
                      sfDir: String): DataFrame = {
     import graft.operators.ProductQuant
-    graft.functions.DotLong.register(spark)
-    graft.functions.IvfProbes.register(spark)
-    graft.functions.QuantizeKernels.register(spark)
     val books = ProductQuant.pqTrain(spark, sfDir)
     val codes = ProductQuant.pqCodeCols(books)
     embStream

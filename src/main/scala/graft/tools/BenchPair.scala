@@ -1,27 +1,14 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 object BenchPair {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // honors the bench's core-count contract so targeted pairs can be
-    // run at different parallelism (r17: the sf10 scan-bound scaling
-    // evidence) — default unchanged
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // optional session confs for knob experiments (Verify refuses
-    // oracle-pinned overrides; an isolated probe is where they belong):
+    // SPARK_GRAFT_CPUS sets the parallelism, so targeted pairs can be
+    // run at different core counts
+    val spark = GraftSession.local()
+    // optional session confs for knob experiments:
     //   SPARK_GRAFT_CONF="spark.graft.ivf.k=64;spark.graft.topK=20"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-        println(s"PAIR conf ${k.trim}=${v.trim}")
-      })
+    GraftSession.applyConfOverrides(spark).foreach(kv => println(s"PAIR conf $kv"))
     val names = args.toSeq
     (1 to 2).foreach { pass =>
       names.foreach { n =>

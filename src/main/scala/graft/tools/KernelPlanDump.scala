@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NativeColumns.{column, expression}
 import graft.functions.TextOps
 
 /** Dump the BUILD-pipeline plans behind the memoized hash/skipgram
@@ -20,17 +20,8 @@ object KernelPlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.drop(1).headOption.getOrElse("plans/r17")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    graft.functions.HashKernels.register(spark)
 
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val t = col("t")
@@ -72,7 +63,7 @@ object KernelPlanDump {
       .groupBy(col("p.center").as("center"), col("p.context").as("context"))
       .agg(count(lit(1)).as("cnt"))
     val skipAfter = docs.where(col("text").isNotNull)
-      .select(explode(call_function("skipgram_pairs", toks, lit(W))).as("p"))
+      .select(explode(column(graft.functions.SkipgramPairs(expression(toks), W))).as("p"))
       .groupBy(col("p.center").as("center"), col("p.context").as("context"))
       .agg(count(lit(1)).as("cnt"))
 

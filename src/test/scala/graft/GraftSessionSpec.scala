@@ -1,0 +1,12 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+class GraftSessionSpec extends AnyFunSuite {
+  test("SPARK_GRAFT_CONF parsing drops empty keys and segments with no '='") {
+    // an empty key would reach spark.conf.set("", ...) and abort the run
+    assert(GraftSession.confOverrides(Some("=x;a.b=1; c = 2 ;noeq;;d=x=y")) ==
+      Seq("a.b" -> "1", "c" -> "2", "d" -> "x=y"))
+    assert(GraftSession.confOverrides(None).isEmpty)
+  }
+}

@@ -54,10 +54,9 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("dot_long is SQL-callable once registered (extensions wiring)") {
-    // the extensions class and DotLong.register share the same builder;
-    // a fresh session can't be created in this JVM (getOrCreate returns
-    // the shared test session), so exercise the registry path directly
-    graft.functions.DotLong.register(spark)
+    // the extensions class and install read the same function table;
+    // exercise the install path on the shared test session
+    GraftExtensions.install(spark)
     val r = spark.sql("SELECT dot_long(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d").collect()
     assert(r(0).getLong(0) == 32L)
   }
@@ -74,7 +73,7 @@ class ScaleOpsSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, LongType}
     import graft.operators.Similarity
-    graft.functions.AnnBuckets.register(spark)
+    GraftExtensions.install(spark)
     val planes = 5
     val vec = (0 until Similarity.Dims).map(i => (i * 37 % 101) - 50L)
     val flat = (0 until Similarity.AnnTables).flatMap(t =>
@@ -136,7 +135,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("ANN candidate pairs stay ~linear in corpus size (bucket count scales)") {
     import graft.operators.Similarity
-    graft.functions.DotLong.register(spark) // don't depend on suite order
+    GraftExtensions.install(spark) // don't depend on suite order
     // 10k deterministic pseudo-random vectors, already in quantized
     // space. With a FIXED 16-bucket space this corpus would generate
     // ~n²/32 ≈ 3.1M candidate pairs; the scaled bucketing must stay
@@ -165,7 +164,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("spark.graft.ann.planes overrides the derived plane count") {
     import graft.operators.Similarity
-    graft.functions.DotLong.register(spark)
+    GraftExtensions.install(spark)
     try {
       spark.conf.set(GraftConf.AnnPlanesKey, "4")
       // with 4 forced planes the query must still run and stay a
