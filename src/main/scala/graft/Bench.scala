@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -61,26 +62,34 @@ object Bench {
     // map stays the min (the first pass absorbs JVM/codegen/scan warmup
     // that would otherwise bill whichever query runs first). A -1
     // (error) stays -1. Within each pass a block probe fires every
-    // [[blockSize]] queries, keyed by the first query of the block.
+    // [[blockSize]] queries, keyed by the first query of the block. Each
+    // query also records the classes Spark's code generator compiled
+    // while it ran (code-cache misses).
     val names = SparkEntry.queries.keys.toSeq.sorted
     val blockSize = 25
-    def runPass(): (Map[String, Double], Seq[(String, Double)]) = {
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def runPass(): (Map[String, Double], Seq[(String, Double)], Map[String, Long]) = {
       val times = Map.newBuilder[String, Double]
       val blockProbes = Seq.newBuilder[(String, Double)]
+      val compiles = Map.newBuilder[String, Long]
       names.grouped(blockSize).foreach { block =>
         blockProbes += block.head -> cpuProbe()
-        block.foreach(n => times += n -> timeOnce(SparkEntry.queries(n)))
+        block.foreach { n =>
+          val c0 = compiled()
+          times += n -> timeOnce(SparkEntry.queries(n))
+          compiles += n -> (compiled() - c0)
+        }
       }
-      (times.result(), blockProbes.result())
+      (times.result(), blockProbes.result(), compiles.result())
     }
-    val (pass1, blocks1) = runPass()
+    val (pass1, blocks1, compiles1) = runPass()
     // drop persisted intermediates so pass 2 measures true recompute,
     // not cache reads (clearCache covers persisted plans; reset drops
     // the memoized checkpoint frames, which clearCache cannot see)
     spark.catalog.clearCache()
     graft.operators.Materialize.reset(spark)
     val probeMid = cpuProbe()
-    val (pass2, blocks2) = runPass()
+    val (pass2, blocks2, compiles2) = runPass()
     val results = names.map { n =>
       val (t1, t2) = (pass1(n), pass2(n))
       n -> (if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2))
@@ -157,14 +166,15 @@ object Bench {
       ps.map { case (k, v) => q(k) + ":" + pf(v) }.mkString("{", ",", "}")
     val probeJson =
       s"""{"before":${pf(probeBefore)},"mid":${pf(probeMid)},"after":${pf(probeAfter)},"blocks_pass1":${probeMap(blocks1)},"blocks_pass2":${probeMap(blocks2)},"unit":"sec per 500M xorshift steps, single core, min of 3; block keys = first query of each 25-query block"}"""
-    def passMap(m: Map[String, Double]): String =
+    def passMap(m: Map[String, Any]): String =
       names.map(n => q(n) + ":" + m(n)).mkString("{", ",", "}")
+    val compilesJson = s"""{"pass1":${passMap(compiles1)},"pass2":${passMap(compiles2)}}"""
     // self-identify the parallelism contract (r16 verdict item 1: the
     // driver's suspect_cpus_ignored heuristic fired because the JSON
     // carried no evidence the env var reached Spark — emit the resolved
     // core count AND the master string the session actually runs with)
     val masterStr = spark.sparkContext.master
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"master":${q(masterStr)},"errors":$errs,"conf":$conf,"cpu_probe":$probeJson,"exact_baseline":$exactJson,"build_phase":$buildJson,"queries":$qs,"queries_pass1":${passMap(pass1)},"queries_pass2":${passMap(pass2)},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"master":${q(masterStr)},"errors":$errs,"conf":$conf,"cpu_probe":$probeJson,"exact_baseline":$exactJson,"build_phase":$buildJson,"queries":$qs,"queries_pass1":${passMap(pass1)},"queries_pass2":${passMap(pass2)},"sf":"$sfDir","codegen_compiles":$compilesJson}"""
     println(json)
     // Also persist to the repo: the driver captures the stdout tail,
     // which truncates the per-query map once the registry is this big

@@ -15,7 +15,11 @@ import graft.sources.Tables
   *    final HashAggregate → TakeOrderedAndProject(k)`
   * — one shuffle total, k rows to the driver. The reference needed two
   * MapReduce jobs + an HDFS barrier for the same shape
-  * (`Query 1a/TopKNetProfitDriver.java:211-244`).
+  * (`Query 1a/TopKNetProfitDriver.java:211-244`). K and the date window
+  * bind at execution: on a session with [[graft.GraftExtensions]]
+  * installed, the scan filter's bounds reach the generated code as
+  * values ([[graft.plans.BindScanLiterals]]), so a new K or window runs
+  * the classes the first call compiled.
   *
   * Money arithmetic is exact integer fixed-point: prices/discounts carry
   * exactly 2 decimal digits, so `round(x*100)` is an unambiguous integer

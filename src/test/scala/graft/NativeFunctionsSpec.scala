@@ -19,7 +19,6 @@ class NativeFunctionsSpec extends SparkSpec {
   }
 
   test("a wrong argument count fails at analysis with WRONG_NUM_ARGS naming the function") {
-    GraftExtensions.install(spark)
     for ((sql, fn, expected) <- Seq(
         ("SELECT hash60('a', 'b')", "hash60", 1),
         ("SELECT dot_long(array(1L))", "dot_long", 2),

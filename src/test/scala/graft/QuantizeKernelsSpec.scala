@@ -34,7 +34,6 @@ class QuantizeKernelsSpec extends SparkSpec {
   }
 
   test("quantize_long matches the transform/round HOF form on fixture + edges") {
-    GraftExtensions.install(spark)
     val hof = (c: org.apache.spark.sql.Column) =>
       transform(c, x => round(x.cast("double") * 1000000.0).cast("long"))
     // fixture embeddings (float elements)
@@ -50,7 +49,6 @@ class QuantizeKernelsSpec extends SparkSpec {
   }
 
   test("int8_codes matches the maxabs/round HOF form on fixture + edges") {
-    GraftExtensions.install(spark)
     def hofCodes(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("e"),
         array_max(transform(col("e"), x => abs(x))).as("maxabs"))

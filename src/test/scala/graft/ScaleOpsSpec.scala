@@ -73,7 +73,6 @@ class ScaleOpsSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, LongType}
     import graft.operators.Similarity
-    GraftExtensions.install(spark)
     val planes = 5
     val vec = (0 until Similarity.Dims).map(i => (i * 37 % 101) - 50L)
     val flat = (0 until Similarity.AnnTables).flatMap(t =>
@@ -135,7 +134,6 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("ANN candidate pairs stay ~linear in corpus size (bucket count scales)") {
     import graft.operators.Similarity
-    GraftExtensions.install(spark) // don't depend on suite order
     // 10k deterministic pseudo-random vectors, already in quantized
     // space. With a FIXED 16-bucket space this corpus would generate
     // ~n²/32 ≈ 3.1M candidate pairs; the scaled bucketing must stay
@@ -164,7 +162,6 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("spark.graft.ann.planes overrides the derived plane count") {
     import graft.operators.Similarity
-    GraftExtensions.install(spark)
     try {
       spark.conf.set(GraftConf.AnnPlanesKey, "4")
       // with 4 forced planes the query must still run and stay a

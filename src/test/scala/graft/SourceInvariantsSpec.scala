@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scan of `src/main/scala`: native functions reach sessions
-  * through one table and sessions through one factory. */
+/** Source scan of `src/main/scala`: native functions, optimizer rules and
+  * planner strategies reach sessions through one install path, and
+  * sessions through one factory. */
 class SourceInvariantsSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -30,6 +31,12 @@ class SourceInvariantsSpec extends AnyFunSuite {
   test("native functions are registered only by the extensions table") {
     assert(filesWith("registerFunction") == Seq("graft/GraftExtensions.scala"))
     assert(filesWith("injectFunction") == Seq("graft/GraftExtensions.scala"))
+  }
+
+  test("optimizer rules and planner strategies are added only by the extensions") {
+    for (hook <- Seq("extraStrategies", "extraOptimizations",
+        "injectPlannerStrategy", "injectOptimizerRule"))
+      assert(filesWith(hook) == Seq("graft/GraftExtensions.scala"), hook)
   }
 
   test("no call_function with a native function name") {

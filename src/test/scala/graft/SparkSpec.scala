@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM — never
-  * stopped, so suites can run in any order. */
+  * stopped, so suites can run in any order. It plans with the library
+  * installed, as production sessions do, with the cartesian guard left
+  * unarmed (its off-by-default check lives in GuardSpec). */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -15,6 +17,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(s)
     s
   }
   val sf: String = "/root/testdata/sf0.001"
