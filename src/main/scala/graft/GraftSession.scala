@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session factory of graft's mains and tools (Bench, Verify,
-  * Probe, `graft.tools.*`): a local session with the shared confs, the
-  * native functions and guard rule installed
+  * `graft.tools.*`): a local session with the shared confs, the native
+  * functions and guard rule installed
   * ([[GraftExtensions.install]]), and the cartesian guard armed, so
   * every tool plans queries the way Verify certifies them. */
 object GraftSession {

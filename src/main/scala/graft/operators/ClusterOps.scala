@@ -36,11 +36,6 @@ import graft.sources.Tables
   */
 object ClusterOps {
 
-  /** Rounds the last [[componentsOf]] call took to converge — a
-    * diagnostic readout for the O(log diameter) claim (ScaleEvidence
-    * measures it across fixture scales). Driver-side only. */
-  @volatile private[graft] var lastConvergenceRounds: Int = -1
-
   /** Connected components of an undirected edge list (`doc_a`,
     * `doc_b`): one row per node appearing in any edge, labeled with its
     * component's minimum node id. */
@@ -102,7 +97,6 @@ object ClusterOps {
         throw e
     }
     Materialize.free(sym)
-    lastConvergenceRounds = iter
     labels
   }
 

@@ -98,25 +98,25 @@ object GraphRank {
       pagerankBuild(spark, sfDir)
     }.orderBy(col("node").asc)
 
-  /** Bounded collect behind the graph family's driver-side iterations
-    * (r16 verdict item 3: the collects assumed a ~100-item vocabulary
-    * FOREVER — true of every fixture, but an assumption about the
-    * data, not an enforced invariant). A `count()` probe bounds what
-    * can ever reach the driver: the frame is collected only when it
-    * holds at most cap rows, and a `None` tells the caller to run its
-    * retained distributed iteration instead.
+  /** Bounded collect behind the graph family's driver-side iterations:
+    * ONE `limit(cap + 1).collect()` job chain reads the frame once, and
+    * a result longer than cap rows is dropped, so at most cap + 1 rows
+    * ever reach the driver and a `None` tells the caller to run its
+    * retained distributed iteration instead. Reading once also means a
+    * non-deterministic frame cannot grow between a probe and its
+    * collect, and an un-checkpointed `.distinct()` shuffles once.
     * Cap = `spark.graft.graph.collectCap` (default 1M slim edge rows
     * ≈ tens of MB of driver tuples); a pure plan-shape knob — both
     * paths are bit-exact by construction, so results are invariant to
-    * it (GraphRankSpec pins driver ≡ distributed on synthetic graphs
-    * by forcing cap 0). The probe is ONE `count()` job (the frames
-    * here are memoized checkpoints or their cheap projections — a
-    * CollectLimit probe was measured paying up to 4 scale-up jobs),
-    * and the collect itself only fires once the count proved it
-    * bounded. */
+    * it (GraphRankSpec pins driver ≡ distributed at cap 0 and at the
+    * boundary). At sf0.1 this takes fewer Spark jobs than a `count()`
+    * probe before the collect, or a `localCheckpoint` before both
+    * (`graft.tools.Profile`, recold: events_pagerank 7 vs 9 and 10,
+    * graph_triangles 7 vs 10 and 10, graph_kcore 10 vs 13 and 13). */
   private def collectEdgesBounded(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
     val cap = graft.GraftConf.graphCollectCap(df.sparkSession)
-    if (df.count() > cap) None else Some(df.collect())
+    val rows = df.limit(math.min(cap, Int.MaxValue - 1) + 1).collect()
+    if (rows.length > cap) None else Some(rows)
   }
 
   /** The power iteration runs ON THE DRIVER over the collected edge

@@ -11,7 +11,7 @@ import graft.sources.Tables
   * eager `localCheckpoint`. Checkpoint blocks have no lineage and are
   * not covered by `spark.catalog.clearCache()`, so checkpointing anew
   * on EVERY query construction would leak block sets for the session
-  * lifetime (Probe's repeat runs, the blanket PropertiesSpec
+  * lifetime (Profile's repeat runs, the blanket PropertiesSpec
   * construction of all queries, a long-lived SQL session). Instead the
   * checkpointed frame is registered once as a `graft_ckpt_*` temp view
   * and reused: exactly ONE checkpoint lives per (operator variant,
@@ -81,7 +81,7 @@ private[graft] object Materialize {
   }
 
   /** Drop every memoized checkpoint in the session and free its blocks
-    * promptly — Bench/Probe call this between passes so they measure
+    * promptly — Bench/Profile call this between passes so they measure
     * true recompute, not memo reads. Registered pipeline views that
     * hold checkpoint-backed frames would be left dead (no lineage to
     * recompute from), so they are invalidated in the same breath and

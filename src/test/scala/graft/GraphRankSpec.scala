@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.operators.GraphRank
 import graft.sources.Tables
@@ -75,6 +78,39 @@ class GraphRankSpec extends SparkSpec {
       assert(kcDist == kcDriver)
       assert(prDist == prDriver)
     } finally spark.conf.unset(GraftConf.GraphCollectCapKey)
+  }
+
+  // the driver loops return a local relation; the distributed
+  // iterations read their own checkpoints
+  private def driverBuilt(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    plan.exists(_.isInstanceOf[LocalRelation]) && !plan.exists(_.isInstanceOf[LogicalRDD])
+  }
+
+  test("collect cap boundary: at the deduped edge count the driver path runs, one below it the distributed path, same results") {
+    // K8 (every node survives the 6-core) plus a peeled tail, with a
+    // reversed duplicate, a repeated edge and a self-loop for the dedup
+    val clique = for (a <- 1L to 8L; b <- (a + 1) to 8L) yield (a, b)
+    val raw = clique ++ Seq((8L, 9L), (9L, 10L), (10L, 11L), (2L, 1L), (8L, 9L), (5L, 5L))
+    val edges = spark.createDataFrame(raw).toDF("src", "dst")
+    val deduped = clique.size + 3L
+    def at(cap: Long) = {
+      spark.conf.set(GraftConf.GraphCollectCapKey, cap.toString)
+      try {
+        val tri = GraphRank.trianglesOf(edges)
+        val kc = GraphRank.kcoreOf(edges, GraphRank.KCoreK, GraphRank.KCoreRounds)
+        (driverBuilt(tri), driverBuilt(kc), tri.collect().toSeq, kc.collect().toSeq)
+      } finally spark.conf.unset(GraftConf.GraphCollectCapKey)
+    }
+    val (triOnDriver, kcOnDriver, triDriver, kcDriver) = at(deduped)
+    val (triOverCap, kcOverCap, triDist, kcDist) = at(deduped - 1)
+    assert(triOnDriver && kcOnDriver)
+    assert(!triOverCap && !kcOverCap)
+    // C(7,2) = 21 triangles through each clique node, none on the tail
+    assert(triDriver.map(r => r.getLong(0) -> r.getLong(1)) == (1L to 8L).map(_ -> 21L))
+    assert(kcDriver.map(_.getLong(0)) == (1L to 8L))
+    assert(triDist == triDriver)
+    assert(kcDist == kcDriver)
   }
 
   test("pagerank: every node ranked, mass bounded, base-rank floor holds") {

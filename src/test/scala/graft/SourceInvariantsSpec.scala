@@ -5,8 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan of `src/main/scala`: native functions, optimizer rules and
-  * planner strategies reach sessions through one install path, and
-  * sessions through one factory. */
+  * planner strategies reach sessions through one install path, sessions
+  * through one factory, and profiling goes through one tool. */
 class SourceInvariantsSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -48,6 +48,12 @@ class SourceInvariantsSpec extends AnyFunSuite {
       if natives(m.group(1))
     } yield s"$f: ${m.group(1)}"
     assert(hits.isEmpty)
+  }
+
+  test("the mains are Bench, Verify and the four tools, with one profiling tool") {
+    assert(filesWith("def main(") == Seq("graft/Bench.scala", "graft/Verify.scala",
+      "graft/tools/BenchPair.scala", "graft/tools/GenScale.scala",
+      "graft/tools/Profile.scala", "graft/tools/ReconError.scala"))
   }
 
   test("exactly one SparkSession.builder(), inside GraftSession") {
