@@ -147,6 +147,15 @@ object GraftConf {
     * guard is needed. */
   val NoCartesianGuardKey = "spark.graft.guard.noCartesian"
 
+  /** Knobs whose override changes only the Spark side while the oracle
+    * SQL bakes the default; `Verify` refuses an override of each rather
+    * than report false mismatches. Result-invariant knobs (the simhash
+    * hot cap, the curriculum band count) are not listed. */
+  val OraclePinnedKeys: Seq[String] = Seq(AnnPlanesKey, MinhashBucketCapKey,
+    PackingShardsKey, ChunkSizeKey, ChunkStrideKey, ExportShardsKey,
+    SemdedupCellCapKey, VocabSizeKey, KnnKKey, TopKKey, Q1StartKey, Q1EndKey,
+    Q1cStartKey, Q1cEndKey, SessionGapKey, GroupTopKKey, SpanWindowKey, IvfKKey)
+
   val DefaultTopK = 10
   val DefaultQ1Start = "1996-01-01"
   val DefaultQ1End = "1997-12-31 23:59:59"

@@ -1,825 +1,463 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{AnalyticsExt, BloomJoin, Bpe, Chunking, ClusterOps, CoOccur, Curation, DataQuality, Decontamination, DedupOps, EventOps, GraphRank, HeavyHitters, LayoutOps, Multimodal, Packing, QualityFilters, Quantization, RankSetOps, RefQueries, Retrieval, Sharding, Similarity, SpanDedup, TextAnalysis, TpchComplete, TpchExt}
+import graft.operators.{AnalyticsExt, BloomJoin, Bpe, Chunking, ClusterOps, CoOccur, Curation, DataQuality, Decontamination, DedupOps, EventOps, GraphRank, HeavyHitters, LayoutOps, Multimodal, Packing, PipelineViews, ProductQuant, QualityFilters, Quantization, RankSetOps, RefQueries, Retrieval, Sharding, Similarity, SpanDedup, TextAnalysis, TpchComplete, TpchExt, Versioning}
+import graft.sources.Tables
+import graft.streaming.DocStream
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 (and the LLM-pipeline
   * extension surface) is registered here as a named query with a DuckDB
   * oracle SQL twin. Column names are aliased identically on both sides so
   * the driver's sort-columns-by-name hash compare is stable.
+  *
+  * Each query is stated once, as one row of [[rows]]; [[queries]],
+  * [[oracleSql]] and `PipelineViews.views` are derived from that list.
   */
 object SparkEntry {
+
+  type Build = (SparkSession, String) => DataFrame
+
+  /** One registered query: its name and how Spark builds it. */
+  private[graft] sealed trait Row {
+    def name: String
+    def build: Build
+  }
+
+  /** A DataFrame query with its oracle SQL. `view`, unless empty, names
+    * the `graft_*` pipeline view that serves the same build to SQL. */
+  private[graft] final case class Op(name: String, build: Build, oracle: String,
+      view: String = "") extends Row
+
+  /** The declarative entry point (the reference's Hive CLI path,
+    * SURVEY.md §3.3): `spark.sql` over the fixture tables runs the very
+    * text the DuckDB oracle runs. */
+  private[graft] final case class FixtureSql(name: String, text: String) extends Row {
+    def build: Build = (s, dir) => { Tables.ensureViews(s, dir); s.sql(text) }
+  }
+
+  /** The same declarative surface over a pipeline operator: plain SQL
+    * against its registered `graft_*` view (a SQL-only deployment's
+    * path to near-dedup or sessionization). Its oracle is the oracle of
+    * the [[Op]] row that owns `view`. */
+  private[graft] final case class ViewSql(name: String, view: String, cols: String,
+      order: String) extends Row {
+    def text: String = s"SELECT $cols FROM $view ORDER BY $order"
+    def build: Build = (s, dir) => { PipelineViews.ensureOne(s, dir, view); s.sql(text) }
+  }
+
+  /** The registry derived from a row list. */
+  private[graft] final case class Registry(queries: Map[String, Build],
+      oracleSql: Map[String, String], views: Seq[(String, Build)])
+
+  /** Index `rows`, refusing a name registered twice, a view owned by two
+    * [[Op]] rows, and a [[ViewSql]] row whose view has no owner. */
+  private[graft] def index(rows: Seq[Row]): Registry = {
+    def dups(names: Seq[String]) = names.diff(names.distinct).distinct.sorted
+    val twice = dups(rows.map(_.name))
+    require(twice.isEmpty, s"query registered twice: ${twice.mkString(", ")}")
+    val owners = rows.collect { case o: Op if o.view.nonEmpty => o.view -> o }
+    val shared = dups(owners.map(_._1))
+    require(shared.isEmpty, s"view owned by two queries: ${shared.mkString(", ")}")
+    val ownerOf = owners.toMap
+    val oracles = rows.map {
+      case o: Op => o.name -> o.oracle
+      case f: FixtureSql => f.name -> f.text
+      case v: ViewSql =>
+        val owner = ownerOf.getOrElse(v.view,
+          throw new IllegalArgumentException(s"${v.name}: no query owns view ${v.view}"))
+        v.name -> owner.oracle
+    }
+    Registry(rows.map(r => r.name -> r.build).toMap, oracles.toMap,
+      owners.map { case (v, o) => v -> o.build })
+  }
 
   /** Flagship query (Q1a shape) on sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     RefQueries.q1aTopRevenue(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1a_top_revenue"     -> ((s, dir) => RefQueries.q1aTopRevenue(s, dir)),
-    "q1b_top_quantity"    -> ((s, dir) => RefQueries.q1bTopQuantity(s, dir)),
-    "q1c_revenue_by_date" -> ((s, dir) => RefQueries.q1cRevenueByDate(s, dir)),
-    "q2_supplier_join"    -> ((s, dir) => RefQueries.q2SupplierRevenueJoin(s, dir)),
-    "eda_lineitem_stats"  -> ((s, dir) => RefQueries.edaLineitemStats(s, dir)),
-    "agg_pricing_summary" -> ((s, dir) => RefQueries.aggPricingSummary(s, dir)),
-    "text_stats"          -> ((s, dir) => TextAnalysis.textStats(s, dir)),
-    "lang_id_confusion"   -> ((s, dir) => TextAnalysis.langIdConfusion(s, dir)),
-    "lang_id_ngram"       -> ((s, dir) => TextAnalysis.langIdNgramConfusion(s, dir)),
-    "quality_score"       -> ((s, dir) => TextAnalysis.qualityScore(s, dir)),
-    "token_counts"        -> ((s, dir) => TextAnalysis.tokenCounts(s, dir)),
-    "fingerprints"        -> ((s, dir) => TextAnalysis.fingerprints(s, dir)),
-    "text_keywords"       -> ((s, dir) => TextAnalysis.keywordsPerSource(s, dir)),
-    "text_keywords_kmv"   -> ((s, dir) => TextAnalysis.keywordsPerSourceKmv(s, dir)),
-    "approx_distinct_tokens" -> ((s, dir) => TextAnalysis.approxDistinctTokens(s, dir)),
-    "dedup_exact"         -> ((s, dir) => DedupOps.dedupExact(s, dir)),
-    "dedup_spans"         -> ((s, dir) => SpanDedup.dedupSpans(s, dir)),
-    "span_dup_rate"       -> ((s, dir) => SpanDedup.spanDupRate(s, dir)),
+  /** Every registered query, one row each. */
+  private[graft] val rows: Seq[Row] = Seq(
+    Op("q1a_top_revenue", RefQueries.q1aTopRevenue, RefQueries.q1aSql),
+    Op("q1b_top_quantity", RefQueries.q1bTopQuantity, RefQueries.q1bSql),
+    Op("q1c_revenue_by_date", RefQueries.q1cRevenueByDate, RefQueries.q1cSql),
+    Op("q2_supplier_join", RefQueries.q2SupplierRevenueJoin, RefQueries.q2Sql),
+    Op("eda_lineitem_stats", RefQueries.edaLineitemStats, RefQueries.edaSql),
+    Op("agg_pricing_summary", RefQueries.aggPricingSummary, RefQueries.aggPricingSql),
+    Op("text_stats", TextAnalysis.textStats, TextAnalysis.textStatsSql),
+    Op("lang_id_confusion", TextAnalysis.langIdConfusion, TextAnalysis.langIdConfusionSql),
+    Op("lang_id_ngram", TextAnalysis.langIdNgramConfusion, TextAnalysis.langIdNgramConfusionSql),
+    Op("quality_score", TextAnalysis.qualityScore, TextAnalysis.qualityScoreSql, "graft_quality"),
+    Op("token_counts", TextAnalysis.tokenCounts, TextAnalysis.tokenCountsSql),
+    Op("fingerprints", TextAnalysis.fingerprints, TextAnalysis.fingerprintsSql,
+      "graft_fingerprints"),
+    Op("text_keywords", (s, d) => TextAnalysis.keywordsPerSource(s, d),
+      TextAnalysis.keywordsPerSourceSql(), "graft_keywords"),
+    Op("text_keywords_kmv", (s, d) => TextAnalysis.keywordsPerSourceKmv(s, d),
+      TextAnalysis.keywordsPerSourceKmvSql()),
+    Op("approx_distinct_tokens", TextAnalysis.approxDistinctTokens,
+      TextAnalysis.approxDistinctTokensSql),
+    Op("dedup_exact", DedupOps.dedupExact, DedupOps.dedupExactSql, "graft_dedup_exact"),
+    Op("dedup_spans", (s, d) => SpanDedup.dedupSpans(s, d), SpanDedup.dedupSpansSql,
+      "graft_dedup_spans"),
+    Op("span_dup_rate", (s, d) => SpanDedup.spanDupRate(s, d), SpanDedup.spanDupRateSql,
+      "graft_span_dup_rate"),
     // the exact-substring-dedup literature's W≈50 window, as its own
     // fully-oracled registration (W is explicit, not conf-driven, so
     // the oracle-pinning guard on the default knob does not apply)
-    "span_rate_w50"       -> ((s, dir) => SpanDedup.spanDupRate(s, dir, Some(50))),
-    "span_top_text"       -> ((s, dir) => SpanDedup.spanTopText(s, dir)),
-    "dedup_incremental"   -> ((s, dir) => DedupOps.incrementalCandidates(s, dir)),
-    "dedup_clusters"      -> ((s, dir) => ClusterOps.dedupClusters(s, dir)),
-    "quality_repetition"  -> ((s, dir) => QualityFilters.repetitionStats(s, dir)),
-    "chunk_documents"     -> ((s, dir) => Chunking.chunkDocuments(s, dir)),
-    "embed_quantize"      -> ((s, dir) => Quantization.embedQuantize(s, dir)),
-    "shuffle_export"      -> ((s, dir) => Sharding.shuffleExport(s, dir)),
-    "dedup_survivors"     -> ((s, dir) => ClusterOps.dedupSurvivors(s, dir)),
-    "dedup_rep_quality"   -> ((s, dir) => ClusterOps.canonicalByQuality(s, dir)),
-    "dedup_clusters_incr" -> ((s, dir) => ClusterOps.incrementalClusters(s, dir)),
-    "lm_bigram_score"     -> ((s, dir) => QualityFilters.bigramLmScore(s, dir)),
-    "source_profile"      -> ((s, dir) => TextAnalysis.sourceProfile(s, dir)),
-    "vocab_induction"     -> ((s, dir) => TextAnalysis.vocabInduction(s, dir)),
-    "oov_rate"            -> ((s, dir) => TextAnalysis.oovStats(s, dir)),
-    "curriculum_order"    -> ((s, dir) => Sharding.curriculumOrder(s, dir)),
-    "dedup_minhash_cand"  -> ((s, dir) => DedupOps.minhashCandidates(s, dir)),
-    "dedup_jaccard"       -> ((s, dir) => DedupOps.nearDupJaccard(s, dir)),
-    "dedup_containment"   -> ((s, dir) => DedupOps.containmentPairs(s, dir)),
-    "boilerplate_stats"   -> ((s, dir) => QualityFilters.boilerplateStats(s, dir)),
-    "source_overlap"      -> ((s, dir) => TextAnalysis.sourceOverlap(s, dir)),
-    "dedup_simhash"       -> ((s, dir) => DedupOps.simhashSignatures(s, dir)),
-    "dedup_simhash_pairs" -> ((s, dir) => DedupOps.simhashNearDups(s, dir)),
-    "sim_cosine_topk"     -> ((s, dir) => Similarity.cosineTopK(s, dir)),
-    "sim_ann_topk"        -> ((s, dir) => Similarity.annTopK(s, dir)),
-    "sim_ivf_topk"        -> ((s, dir) => Similarity.ivfTopK(s, dir)),
-    "sim_ivf_trained"     -> ((s, dir) => Similarity.ivfTrainedTopK(s, dir)),
-    "sim_embedding_dups"  -> ((s, dir) => Similarity.embeddingNearDups(s, dir)),
-    "semantic_dedup"      -> ((s, dir) => Similarity.semanticDedup(s, dir)),
-    "knn_label"           -> ((s, dir) => Similarity.knnLabel(s, dir)),
-    "knn_label_ivf"       -> ((s, dir) => Similarity.knnLabelIvf(s, dir)),
+    Op("span_rate_w50", (s, d) => SpanDedup.spanDupRate(s, d, Some(50)),
+      SpanDedup.spanDupRateSqlFor(50)),
+    Op("span_top_text", (s, d) => SpanDedup.spanTopText(s, d), SpanDedup.spanTopTextSql,
+      "graft_span_top_text"),
+    Op("dedup_incremental", DedupOps.incrementalCandidates, DedupOps.incrementalCandidatesSql,
+      "graft_dedup_incremental"),
+    Op("dedup_clusters", ClusterOps.dedupClusters, ClusterOps.dedupClustersSql,
+      "graft_dedup_clusters"),
+    Op("quality_repetition", QualityFilters.repetitionStats, QualityFilters.repetitionStatsSql,
+      "graft_repetition"),
+    Op("chunk_documents", Chunking.chunkDocuments, Chunking.chunkDocumentsSql, "graft_chunks"),
+    Op("embed_quantize", Quantization.embedQuantize, Quantization.embedQuantizeSql,
+      "graft_quantized"),
+    Op("shuffle_export", Sharding.shuffleExport, Sharding.shuffleExportSql, "graft_shuffle_export"),
+    Op("dedup_survivors", ClusterOps.dedupSurvivors, ClusterOps.dedupSurvivorsSql,
+      "graft_dedup_survivors"),
+    Op("dedup_rep_quality", ClusterOps.canonicalByQuality, ClusterOps.canonicalByQualitySql,
+      "graft_rep_quality"),
+    Op("dedup_clusters_incr", ClusterOps.incrementalClusters, ClusterOps.incrementalClustersSql),
+    Op("lm_bigram_score", QualityFilters.bigramLmScore, QualityFilters.bigramLmScoreSql,
+      "graft_lm_score"),
+    Op("source_profile", TextAnalysis.sourceProfile, TextAnalysis.sourceProfileSql,
+      "graft_source_profile"),
+    Op("vocab_induction", TextAnalysis.vocabInduction, TextAnalysis.vocabInductionSql,
+      "graft_vocab"),
+    Op("oov_rate", TextAnalysis.oovStats, TextAnalysis.oovStatsSql, "graft_oov"),
+    Op("curriculum_order", Sharding.curriculumOrder, Sharding.curriculumOrderSql,
+      "graft_curriculum"),
+    Op("dedup_minhash_cand", DedupOps.minhashCandidates, DedupOps.minhashCandidatesSql,
+      "graft_minhash_candidates"),
+    Op("dedup_jaccard", DedupOps.nearDupJaccard, DedupOps.nearDupJaccardSql, "graft_near_dups"),
+    Op("dedup_containment", DedupOps.containmentPairs, DedupOps.containmentPairsSql,
+      "graft_containment"),
+    Op("boilerplate_stats", QualityFilters.boilerplateStats, QualityFilters.boilerplateStatsSql,
+      "graft_boilerplate"),
+    Op("source_overlap", TextAnalysis.sourceOverlap, TextAnalysis.sourceOverlapSql,
+      "graft_source_overlap"),
+    Op("dedup_simhash", DedupOps.simhashSignatures, DedupOps.simhashSignaturesSql, "graft_simhash"),
+    Op("dedup_simhash_pairs", DedupOps.simhashNearDups, DedupOps.simhashNearDupsSql,
+      "graft_simhash_pairs"),
+    Op("sim_cosine_topk", Similarity.cosineTopK, Similarity.cosineTopKSql, "graft_cosine_topk"),
+    Op("sim_ann_topk", Similarity.annTopK, Similarity.annTopKSql, "graft_ann_topk"),
+    Op("sim_ivf_topk", Similarity.ivfTopK, Similarity.ivfTopKSql),
+    Op("sim_ivf_trained", Similarity.ivfTrainedTopK, Similarity.ivfTrainedTopKSql),
+    Op("sim_embedding_dups", Similarity.embeddingNearDups, Similarity.embeddingNearDupsSql),
+    Op("semantic_dedup", Similarity.semanticDedup, Similarity.semanticDedupSql,
+      "graft_semantic_dedup"),
+    Op("knn_label", Similarity.knnLabel, Similarity.knnLabelSql, "graft_knn_label"),
+    Op("knn_label_ivf", Similarity.knnLabelIvf, Similarity.knnLabelIvfSql, "graft_knn_label_ivf"),
     // the production serving shape (k=⌈√n⌉ pinned in the query, like
     // span_rate_w50 pins W): driver-tracked so the auto path cannot
     // silently regress
-    "knn_label_ivf_auto"  -> ((s, dir) => Similarity.knnLabelIvfAuto(s, dir)),
-    "cell_quality"        -> ((s, dir) => Similarity.cellQualityReport(s, dir)),
-    "ivf_index_incr"      -> ((s, dir) => Similarity.knnCellIndexIncremental(s, dir)),
-    "events_hourly"       -> ((s, dir) => EventOps.hourlyEventCounts(s, dir)),
-    "events_hourly_incr"  -> ((s, dir) => EventOps.hourlyCountsIncremental(s, dir)),
-    "events_sliding"      -> ((s, dir) => EventOps.slidingEventCounts(s, dir)),
-    "events_sessions"     -> ((s, dir) => EventOps.sessionize(s, dir)),
-    "events_json_props"   -> ((s, dir) => EventOps.propsExtract(s, dir)),
-    "events_asof"         -> ((s, dir) => EventOps.purchaseAttribution(s, dir)),
-    "events_range_join"   -> ((s, dir) => EventOps.nearbyClickCounts(s, dir)),
-    "events_attribution"  -> ((s, dir) => EventOps.attributionWindow(s, dir)),
-    "events_session_native" -> ((s, dir) => EventOps.sessionWindowNative(s, dir)),
-    "zorder_layout"       -> ((s, dir) => LayoutOps.zorderLayout(s, dir)),
-    "events_funnel"       -> ((s, dir) => EventOps.funnelStages(s, dir)),
-    "events_retention"    -> ((s, dir) => EventOps.cohortRetention(s, dir)),
-    "dedup_report"        -> ((s, dir) => ClusterOps.dedupReport(s, dir)),
-    "cluster_size_hist"   -> ((s, dir) => ClusterOps.clusterSizeHistogram(s, dir)),
-    "events_transitions"  -> ((s, dir) => EventOps.sessionTransitions(s, dir)),
-    "events_trailing"     -> ((s, dir) => EventOps.trailingEventRatio(s, dir)),
-    "topk_per_group"      -> ((s, dir) => EventOps.topPartsPerFlag(s, dir)),
-    "multimodal_stats"    -> ((s, dir) => Multimodal.multimodalStats(s, dir)),
-    "multimodal_frames"   -> ((s, dir) => Multimodal.multimodalFrames(s, dir)),
-    "multimodal_decode"   -> ((s, dir) => Multimodal.multimodalDecode(s, dir)),
-    "multimodal_audio"    -> ((s, dir) => Multimodal.multimodalAudio(s, dir)),
-    "multimodal_video"    -> ((s, dir) => Multimodal.multimodalVideo(s, dir)),
-    "corpus_manifest"     -> ((s, dir) => Curation.corpusManifest(s, dir)),
-    "bloom_semi_join"     -> ((s, dir) => BloomJoin.bloomSemiJoinVolume(s, dir)),
-    "pack_sequences"      -> ((s, dir) => Packing.packSequences(s, dir)),
-    "pack_length_buckets" -> ((s, dir) => Packing.lengthBuckets(s, dir)),
-    "eval_overlap"        -> ((s, dir) => Decontamination.evalOverlap(s, dir)),
-    "curate_filter"       -> ((s, dir) => graft.streaming.DocStream
-      .curateStream(graft.sources.Tables.documents(s, dir)).orderBy("doc_id")),
-    "mixture_sample"      -> ((s, dir) => Curation.mixtureSample(s, dir)),
-    "mixture_temperature" -> ((s, dir) => Curation.temperatureMixture(s, dir)),
-    "split_leakage_safe"  -> ((s, dir) => ClusterOps.leakageSplit(s, dir)),
-    "dedup_priority"      -> ((s, dir) => DedupOps.priorityDedup(s, dir)),
-    "version_diff"        -> ((s, dir) => graft.operators.Versioning.versionDiff(s, dir)),
-    "manifest_incremental" -> ((s, dir) => Curation.incrementalManifest(s, dir)),
-    // The declarative entry point (reference's Hive CLI path, SURVEY.md
-    // §3.3): the SAME SQL text the DuckDB oracle runs, executed by
-    // spark.sql over the registered views — full query compatibility.
-    "sql_q1a"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RefQueries.q1aSql)
-    }),
-    "sql_q2"              -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RefQueries.q2Sql)
-    }),
-    "sql_q1b"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RefQueries.q1bSql)
-    }),
-    "sql_q1c"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RefQueries.q1cSql)
-    }),
-    "sql_eda"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RefQueries.edaSql)
-    }),
-    "sql_pricing"         -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RefQueries.aggPricingSql)
-    }),
-    // dialect-portable ANSI twins: spark.sql executes the IDENTICAL
-    // text the DuckDB oracle runs (the Hive-CLI parity path)
-    "sql_q3"              -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(AnalyticsExt.q3ShippingPrioritySql())
-    }),
-    "sql_cum_revenue"     -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(AnalyticsExt.cumulativeRevenueSql)
-    }),
-    "sql_funnel"          -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(EventOps.funnelStagesSql)
-    }),
-    // The SAME declarative surface over the pipeline operators: plain
-    // SQL against registered graft_* views (a SQL-only deployment's
-    // path to near-dedup / sessionization), verified against the same
-    // oracles as their Scala twins.
-    "sql_dedup_exact"     -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_dedup_exact")
-      s.sql("SELECT content_hash, content_hash_b, keep_doc_id, n_copies FROM graft_dedup_exact ORDER BY keep_doc_id ASC")
-    }),
-    "sql_near_dups"       -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_near_dups")
-      s.sql("SELECT doc_a, doc_b, jaccard FROM graft_near_dups ORDER BY doc_a ASC, doc_b ASC")
-    }),
-    "sql_spans"           -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_dedup_spans")
-      s.sql("SELECT span_hash, n_docs, n_occ, first_doc FROM graft_dedup_spans ORDER BY n_docs DESC, n_occ DESC, span_hash ASC")
-    }),
-    "sql_span_text"       -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_span_top_text")
-      s.sql("SELECT span_hash, n_docs, n_occ, first_doc, first_pos, span_text FROM graft_span_top_text ORDER BY n_docs DESC, n_occ DESC, span_hash ASC")
-    }),
-    "sql_span_rate"       -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_span_dup_rate")
-      s.sql("SELECT doc_id, n_windows, n_dup_windows, dup_rate FROM graft_span_dup_rate ORDER BY doc_id ASC")
-    }),
-    "sql_sessions"        -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_sessions")
-      s.sql("SELECT user_id, session_id, session_start, session_end, n_events FROM graft_sessions ORDER BY user_id ASC, session_id ASC")
-    }),
-    "sql_cosine_topk"     -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_cosine_topk")
-      s.sql("SELECT vec_id, label, cos_sim FROM graft_cosine_topk ORDER BY cos_sim DESC, vec_id ASC")
-    }),
-    "sql_ann_topk"        -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_ann_topk")
-      s.sql("SELECT vec_id, label, cos_sim FROM graft_ann_topk ORDER BY cos_sim DESC, vec_id ASC")
-    }),
-    "sql_simhash_pairs"   -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_simhash_pairs")
-      s.sql("SELECT doc_a, doc_b, hamming FROM graft_simhash_pairs ORDER BY doc_a ASC, doc_b ASC")
-    }),
-    "sql_manifest"        -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_corpus_manifest")
-      s.sql("SELECT doc_id, source, lang, n_tokens, quality FROM graft_corpus_manifest ORDER BY doc_id ASC")
-    }),
-    "sql_quality"         -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_quality")
-      s.sql("SELECT doc_id, n_tokens, quality FROM graft_quality ORDER BY doc_id ASC")
-    }),
-    "sql_keywords"        -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_keywords")
-      s.sql("SELECT source, rk, term, tf, df, score FROM graft_keywords ORDER BY source ASC, rk ASC")
-    }),
-    "sql_fingerprints"    -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_fingerprints")
-      s.sql("SELECT doc_id, doc_hash, min_shingle_hash FROM graft_fingerprints ORDER BY doc_id ASC")
-    }),
-    "sql_minhash_cand"    -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_minhash_candidates")
-      s.sql("SELECT doc_a, doc_b, n_shared_bands FROM graft_minhash_candidates ORDER BY doc_a ASC, doc_b ASC")
-    }),
-    "sql_bloom"           -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_bloom_semi_join")
-      s.sql("SELECT l_returnflag, n_rows, sum_qty FROM graft_bloom_semi_join ORDER BY l_returnflag ASC")
-    }),
-    "sql_clusters"        -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_dedup_clusters")
-      s.sql("SELECT doc_id, cluster_id, cluster_size, is_canonical FROM graft_dedup_clusters ORDER BY doc_id ASC")
-    }),
-    "sql_chunks"          -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_chunks")
-      s.sql("SELECT doc_id, chunk_id, start_tok, n_tok, chunk_text FROM graft_chunks ORDER BY doc_id ASC, chunk_id ASC")
-    }),
-    "sql_repetition"      -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_repetition")
-      s.sql("SELECT doc_id, n_tokens, dup_token_frac, top_token_frac, dup_char_frac, dup_bigram_frac, flagged FROM graft_repetition ORDER BY doc_id ASC")
-    }),
-    "sql_quantize"        -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_quantized")
-      s.sql("SELECT vec_id, scale, q_sum, q_wsum, n_sat FROM graft_quantized ORDER BY vec_id ASC")
-    }),
-    "sql_export"          -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_shuffle_export")
-      s.sql("SELECT doc_id, shard, pos, split FROM graft_shuffle_export ORDER BY shard ASC, pos ASC")
-    }),
-    "sql_source_profile"  -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_source_profile")
-      s.sql("SELECT source, n_docs, total_tokens, median_tokens, p90_tokens, n_langs FROM graft_source_profile ORDER BY source ASC")
-    }),
-    "sql_containment"     -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_containment")
-      s.sql("SELECT doc_a, doc_b, cont_a_in_b, cont_b_in_a FROM graft_containment ORDER BY doc_a ASC, doc_b ASC")
-    }),
-    "sql_boilerplate"     -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_boilerplate")
-      s.sql("SELECT doc_id, n_shingles, n_boiler, boiler_frac, flagged FROM graft_boilerplate ORDER BY doc_id ASC")
-    }),
-    "sql_semantic_dedup"  -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_semantic_dedup")
-      s.sql("SELECT vec_id, cid, n_prior, max_prior_cos, dropped FROM graft_semantic_dedup ORDER BY vec_id ASC")
-    }),
-    "sql_source_overlap"  -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_source_overlap")
-      s.sql("SELECT src_a, src_b, n_a, n_b, n_common, jaccard FROM graft_source_overlap ORDER BY src_a ASC, src_b ASC")
-    }),
-    "sql_version_diff"    -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_version_diff")
-      s.sql("SELECT doc_id, status, old_hash, new_hash FROM graft_version_diff ORDER BY doc_id ASC")
-    }),
-    "sql_leakage_split"   -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_leakage_split")
-      s.sql("SELECT doc_id, cluster_id, cluster_size, split FROM graft_leakage_split ORDER BY doc_id ASC")
-    }),
-    "sql_priority_dedup"  -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_priority_dedup")
-      s.sql("SELECT doc_id, source, dup_of FROM graft_priority_dedup ORDER BY doc_id ASC")
-    }),
-    "sql_mixture_temp"    -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_mixture_temp")
-      s.sql("SELECT lang, n_selected, available, target_docs FROM graft_mixture_temp ORDER BY lang ASC")
-    }),
-    "sql_vocab"           -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_vocab")
-      s.sql("SELECT rk, term, cnt, cum_cnt, coverage FROM graft_vocab ORDER BY rk ASC")
-    }),
-    "sql_oov"             -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_oov")
-      s.sql("SELECT source, n_docs, n_tokens, n_oov, oov_frac FROM graft_oov ORDER BY source ASC")
-    }),
-    "sql_curriculum"      -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_curriculum")
-      s.sql("SELECT doc_id, quality, pos FROM graft_curriculum ORDER BY pos ASC")
-    }),
-    "sql_knn_label"       -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_knn_label")
-      s.sql("SELECT query_id, pred_label, n_votes FROM graft_knn_label ORDER BY query_id ASC")
-    }),
-    "sql_quartiles"       -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_quartiles")
-      s.sql("SELECT doc_id, source, quality, quartile FROM graft_quartiles ORDER BY doc_id ASC")
-    }),
-    "sql_redact"          -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_redact")
-      s.sql("SELECT doc_id, n_emails, n_longnums, redacted_hash FROM graft_redact ORDER BY doc_id ASC")
-    }),
-    "sample_per_source"   -> ((s, dir) => TextAnalysis.samplePerSource(s, dir)),
-    "sample_per_source_agg" -> ((s, dir) => TextAnalysis.samplePerSourceAgg(s, dir)),
-    "rollup_pricing"      -> ((s, dir) => AnalyticsExt.rollupPricing(s, dir)),
-    "except_suppliers"    -> ((s, dir) => AnalyticsExt.exceptSuppliers(s, dir)),
-    "cube_pricing"        -> ((s, dir) => AnalyticsExt.cubePricing(s, dir)),
-    "grouping_sets_pricing" -> ((s, dir) => AnalyticsExt.groupingSetsPricing(s, dir)),
-    "q5_local_supplier"   -> ((s, dir) => AnalyticsExt.q5LocalSupplierVolume(s, dir)),
-    "q7_volume_shipping"  -> ((s, dir) => AnalyticsExt.q7VolumeShipping(s, dir)),
-    "q10_returned_items"  -> ((s, dir) => AnalyticsExt.q10ReturnedItems(s, dir)),
-    "revenue_mom_growth"  -> ((s, dir) => AnalyticsExt.revenueMomGrowth(s, dir)),
-    "quality_quartiles"   -> ((s, dir) => TextAnalysis.qualityQuartiles(s, dir)),
-    "text_redact"         -> ((s, dir) => TextAnalysis.textRedact(s, dir)),
-    "quality_quantiles_grid" -> ((s, dir) => TextAnalysis.qualityQuantilesGrid(s, dir)),
-    "sql_grouping_sets"   -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(AnalyticsExt.groupingSetsPricingSql)
-    }),
-    "sql_q5"              -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(AnalyticsExt.q5LocalSupplierVolumeSql)
-    }),
-    "sql_q7"              -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(AnalyticsExt.q7VolumeShippingSql)
-    }),
-    "sql_q10"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(AnalyticsExt.q10ReturnedItemsSql())
-    }),
-    "intersect_suppliers" -> ((s, dir) => AnalyticsExt.intersectSuppliers(s, dir)),
-    "sql_cube_pricing"    -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(AnalyticsExt.cubePricingSql)
-    }),
-    "sql_intersect_suppliers" -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(AnalyticsExt.intersectSuppliersSql)
-    }),
-    "median_quantity"     -> ((s, dir) => AnalyticsExt.medianQuantity(s, dir)),
-    "revenue_by_month"    -> ((s, dir) => AnalyticsExt.revenueByMonth(s, dir)),
-    "q3_shipping_priority" -> ((s, dir) => AnalyticsExt.q3ShippingPriority(s, dir)),
-    "revenue_cumulative"  -> ((s, dir) => AnalyticsExt.cumulativeRevenue(s, dir)),
-    "revenue_trailing_range" -> ((s, dir) => AnalyticsExt.trailingRangeRevenue(s, dir)),
-    "q4_order_priority"   -> ((s, dir) => TpchExt.q4OrderPriority(s, dir)),
-    "q6_forecast_revenue" -> ((s, dir) => TpchExt.q6ForecastRevenue(s, dir)),
-    "q12_priority_class"  -> ((s, dir) => TpchExt.q12PriorityClass(s, dir)),
-    "q14_promo_revenue"   -> ((s, dir) => TpchExt.q14PromoRevenue(s, dir)),
-    "q16_supplier_count"  -> ((s, dir) => TpchExt.q16SupplierCount(s, dir)),
-    "q18_large_orders"    -> ((s, dir) => TpchExt.q18LargeOrders(s, dir)),
-    "q19_disjunctive_revenue" -> ((s, dir) => TpchExt.q19DisjunctiveRevenue(s, dir)),
-    "q22_dormant_customers" -> ((s, dir) => TpchExt.q22DormantCustomers(s, dir)),
-    "sql_q4"              -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.q4OrderPrioritySql)
-    }),
-    "sql_q6"              -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.q6ForecastRevenueSql)
-    }),
-    "sql_q12"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.q12PriorityClassSql)
-    }),
-    "sql_q14"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.q14PromoRevenueSql)
-    }),
-    "sql_q16"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.q16SupplierCountSql)
-    }),
-    "sql_q18"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.q18LargeOrdersSql())
-    }),
-    "sql_q19"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.q19DisjunctiveRevenueSql)
-    }),
-    "sql_q22"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.q22DormantCustomersSql)
-    }),
-    "q8_market_share"     -> ((s, dir) => TpchComplete.q8MarketShare(s, dir)),
-    "q9_product_profit"   -> ((s, dir) => TpchComplete.q9ProductProfit(s, dir)),
-    "q11_important_parts" -> ((s, dir) => TpchComplete.q11ImportantParts(s, dir)),
-    "q13_order_distribution" -> ((s, dir) => TpchComplete.q13OrderDistribution(s, dir)),
-    "q15_top_supplier"    -> ((s, dir) => TpchComplete.q15TopSupplier(s, dir)),
-    "q17_small_qty_revenue" -> ((s, dir) => TpchComplete.q17SmallQtyRevenue(s, dir)),
-    "q20_promotion_suppliers" -> ((s, dir) => TpchComplete.q20PromotionSuppliers(s, dir)),
-    "q21_waiting_suppliers" -> ((s, dir) => TpchComplete.q21WaitingSuppliers(s, dir)),
-    "sql_q8"              -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchComplete.q8MarketShareSql)
-    }),
-    "sql_q9"              -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchComplete.q9ProductProfitSql)
-    }),
-    "sql_q11"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchComplete.q11ImportantPartsSql)
-    }),
-    "sql_q13"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchComplete.q13OrderDistributionSql)
-    }),
-    "sql_q15"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchComplete.q15TopSupplierSql)
-    }),
-    "sql_q17"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchComplete.q17SmallQtyRevenueSql)
-    }),
-    "sql_q20"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchComplete.q20PromotionSuppliersSql)
-    }),
-    "sql_q21"             -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchComplete.q21WaitingSuppliersSql())
-    }),
-    "supplier_rank_pct"   -> ((s, dir) => RankSetOps.supplierRankPct(s, dir)),
-    "except_all_shipments" -> ((s, dir) => RankSetOps.exceptAllShipments(s, dir)),
-    "intersect_all_shipments" -> ((s, dir) => RankSetOps.intersectAllShipments(s, dir)),
-    "pivot_pricing"       -> ((s, dir) => RankSetOps.pivotPricing(s, dir)),
-    "sql_rank_pct"        -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RankSetOps.supplierRankPctSql)
-    }),
-    "sql_except_all"      -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RankSetOps.exceptAllShipmentsSql)
-    }),
-    "sql_intersect_all"   -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RankSetOps.intersectAllShipmentsSql)
-    }),
-    "sql_pivot_pricing"   -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(RankSetOps.pivotPricingSql)
-    }),
-    "profile_lineitem"    -> ((s, dir) => DataQuality.profileLineitem(s, dir)),
-    "dq_checks"           -> ((s, dir) => DataQuality.dqChecks(s, dir)),
-    "orders_reconcile"    -> ((s, dir) => DataQuality.ordersReconcile(s, dir)),
-    "doc_length_winsor"   -> ((s, dir) => TextAnalysis.docLengthWinsor(s, dir)),
-    "sql_profile"         -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(DataQuality.profileLineitemSql)
-    }),
-    "sql_dq_checks"       -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(DataQuality.dqChecksSql)
-    }),
-    "epoch_plan"          -> ((s, dir) => Curation.epochPlan(s, dir)),
-    "above_avg_suppliers" -> ((s, dir) => TpchExt.aboveAvgSuppliers(s, dir)),
-    "sim_int8_topk"       -> ((s, dir) => Quantization.int8TopK(s, dir)),
-    "sql_epoch_plan"      -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_epoch_plan")
-      s.sql("SELECT lang, available_tokens, target_tokens, repeat_x1000 " +
-        "FROM graft_epoch_plan ORDER BY lang ASC")
-    }),
-    "sql_above_avg"       -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(TpchExt.aboveAvgSuppliersSql)
-    }),
-    "sql_int8_topk"       -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_int8_topk")
-      s.sql("SELECT vec_id, label, cos_sim8 FROM graft_int8_topk " +
-        "ORDER BY cos_sim8 DESC, vec_id ASC")
-    }),
-    "sql_reconcile"       -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_reconcile")
-      s.sql("SELECT o_orderstatus, n_orders, n_no_lines, n_contiguous, n_broken " +
-        "FROM graft_reconcile ORDER BY o_orderstatus ASC")
-    }),
-    "sql_winsor"          -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_winsor")
-      s.sql("SELECT source, n_docs, p05_chars, p95_chars, n_clipped_lo, n_clipped_hi " +
-        "FROM graft_winsor ORDER BY source ASC")
-    }),
-    "sql_zorder"          -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_zorder")
-      s.sql("SELECT bucket, n_rows, p_min, p_max, s_min, s_max " +
-        "FROM graft_zorder ORDER BY bucket ASC")
-    }),
-    "sql_session_native"  -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_session_native")
-      s.sql("SELECT user_id, session_start, session_end, n_events " +
-        "FROM graft_session_native ORDER BY user_id ASC, session_start ASC")
-    }),
-    "sql_attribution"     -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_attribution")
-      s.sql("SELECT click_id, view_id, user_id, gap_us " +
-        "FROM graft_attribution ORDER BY click_id ASC, view_id ASC")
-    }),
-    "sql_trailing_range"  -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_trailing_range")
-      s.sql("SELECT day, day_revenue, trailing_7d_revenue " +
-        "FROM graft_trailing_range ORDER BY day ASC")
-    }),
-    "dq_docs"             -> ((s, dir) => DataQuality.dqDocs(s, dir)),
-    "sql_dq_docs"         -> ((s, dir) => {
-      graft.sources.Tables.ensureViews(s, dir); s.sql(DataQuality.dqDocsSql)
-    }),
-    "retrieval_bm25"      -> ((s, dir) => Retrieval.bm25TopK(s, dir)),
-    "retrieval_bm25_multi" -> ((s, dir) => Retrieval.bm25MultiTopK(s, dir)),
-    "fuzzy_join_parts"    -> ((s, dir) => Retrieval.fuzzyJoinParts(s, dir)),
-    "fuzzy_join_customers" -> ((s, dir) => Retrieval.fuzzyJoinCustomers(s, dir)),
-    "sql_bm25"            -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_bm25")
-      s.sql("SELECT doc_id, n_terms, score FROM graft_bm25 " +
-        "ORDER BY score DESC, doc_id ASC")
-    }),
-    "sql_fuzzy_parts"     -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_fuzzy_parts")
-      s.sql("SELECT name_a, name_b, dist, n_a, n_b FROM graft_fuzzy_parts " +
-        "ORDER BY name_a ASC, name_b ASC")
-    }),
-    "entity_resolution"   -> ((s, dir) => Retrieval.entityResolution(s, dir)),
-    "sim_pq_topk"         -> ((s, dir) => graft.operators.ProductQuant.pqTopK(s, dir)),
-    "sql_pq_topk"         -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_pq_topk")
-      s.sql("SELECT vec_id, label, pq_cos FROM graft_pq_topk " +
-        "ORDER BY pq_cos DESC, vec_id ASC")
-    }),
-    "sim_ivfpq_topk"      -> ((s, dir) => graft.operators.ProductQuant.ivfPqTopK(s, dir)),
-    "sim_ivfpq_residual_topk" -> ((s, dir) => graft.operators.ProductQuant.ivfPqResidualTopK(s, dir)),
-    "sim_ivfpq_residual_recall" -> ((s, dir) => graft.operators.ProductQuant.ivfPqResidualRecall(s, dir)),
-    "sim_pq_recall"       -> ((s, dir) => graft.operators.ProductQuant.pqRecall(s, dir)),
-    "pq_build"            -> ((s, dir) => graft.operators.ProductQuant.pqBuild(s, dir)),
-    "pq_build_residual"   -> ((s, dir) => graft.operators.ProductQuant.pqBuildResidual(s, dir)),
-    "pq_codes_small"      -> ((s, dir) => graft.operators.ProductQuant.pqCodesSmall(s, dir)),
-    "pq_encode"           -> ((s, dir) => graft.operators.ProductQuant.pqEncode(s, dir)),
-    "sim_ann_recall"      -> ((s, dir) => Similarity.annRecall(s, dir)),
-    "sim_ivf_recall"      -> ((s, dir) => Similarity.ivfRecall(s, dir)),
-    "sim_ivfpq_recall"    -> ((s, dir) => graft.operators.ProductQuant.ivfPqRecall(s, dir)),
-    "sql_entities"        -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_entities")
-      s.sql("SELECT name, entity_id, n_parts, entity_size, is_canonical " +
-        "FROM graft_entities ORDER BY name ASC")
-    }),
-    "retrieval_bm25_join" -> ((s, dir) => Retrieval.bm25JoinTopK(s, dir)),
-    "retrieval_bm25_maxp" -> ((s, dir) => Retrieval.bm25MaxP(s, dir)),
-    "retrieval_hard_negs" -> ((s, dir) => Retrieval.bm25HardNegatives(s, dir)),
-    "events_pagerank"     -> ((s, dir) => GraphRank.pagerank(s, dir)),
-    "sql_pagerank"        -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_pagerank")
-      s.sql("SELECT node, pagerank FROM graft_pagerank ORDER BY node ASC")
-    }),
-    "graph_triangles"     -> ((s, dir) => GraphRank.triangles(s, dir)),
-    "skipgram_pairs"      -> ((s, dir) => CoOccur.skipgramPairs(s, dir)),
-    "skipgram_pmi"        -> ((s, dir) => CoOccur.skipgramPmi(s, dir)),
-    "sql_skipgrams"       -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_skipgrams")
-      s.sql("SELECT center, context, cnt FROM graft_skipgrams " +
-        "ORDER BY center ASC, context ASC")
-    }),
-    "bpe_merges"          -> ((s, dir) => Bpe.merges(s, dir)),
-    "bpe_vocab"           -> ((s, dir) => Bpe.vocab(s, dir)),
-    "bpe_encode"          -> ((s, dir) => Bpe.encode(s, dir)),
-    "bpe_token_ids"       -> ((s, dir) => Bpe.tokenIds(s, dir)),
-    "bpe_decode"          -> ((s, dir) => Bpe.decode(s, dir)),
-    "bpe_merges_scaled"   -> ((s, dir) => Bpe.mergesScaled(s, dir)),
-    "bpe_encode_scaled"   -> ((s, dir) => Bpe.encodeScaled(s, dir)),
-    "pack_from_bpe"       -> ((s, dir) => Bpe.packFromBpe(s, dir)),
+    Op("knn_label_ivf_auto", Similarity.knnLabelIvfAuto, Similarity.knnLabelIvfAutoSql),
+    Op("cell_quality", Similarity.cellQualityReport, Similarity.cellQualityReportSql,
+      "graft_cell_quality"),
+    Op("ivf_index_incr", Similarity.knnCellIndexIncremental, Similarity.knnCellIndexIncrementalSql),
+    Op("events_hourly", EventOps.hourlyEventCounts, EventOps.hourlyEventCountsSql),
+    Op("events_hourly_incr", EventOps.hourlyCountsIncremental, EventOps.hourlyCountsIncrementalSql),
+    Op("events_sliding", EventOps.slidingEventCounts, EventOps.slidingEventCountsSql),
+    Op("events_sessions", (s, d) => EventOps.sessionize(s, d), EventOps.sessionizeSql(),
+      "graft_sessions"),
+    Op("events_json_props", EventOps.propsExtract, EventOps.propsExtractSql),
+    Op("events_asof", EventOps.purchaseAttribution, EventOps.purchaseAttributionSql),
+    Op("events_range_join", EventOps.nearbyClickCounts, EventOps.nearbyClickCountsSql),
+    Op("events_attribution", EventOps.attributionWindow, EventOps.attributionWindowSql,
+      "graft_attribution"),
+    Op("events_session_native", (s, d) => EventOps.sessionWindowNative(s, d),
+      EventOps.sessionWindowNativeSql(), "graft_session_native"),
+    Op("zorder_layout", LayoutOps.zorderLayout, LayoutOps.zorderLayoutSql, "graft_zorder"),
+    Op("events_funnel", EventOps.funnelStages, EventOps.funnelStagesSql, "graft_funnel"),
+    Op("events_retention", EventOps.cohortRetention, EventOps.cohortRetentionSql,
+      "graft_retention"),
+    Op("dedup_report", ClusterOps.dedupReport, ClusterOps.dedupReportSql, "graft_dedup_report"),
+    Op("cluster_size_hist", ClusterOps.clusterSizeHistogram, ClusterOps.clusterSizeHistogramSql,
+      "graft_cluster_sizes"),
+    Op("events_transitions", EventOps.sessionTransitions, EventOps.sessionTransitionsSql(),
+      "graft_transitions"),
+    Op("events_trailing", EventOps.trailingEventRatio, EventOps.trailingEventRatioSql),
+    Op("topk_per_group", (s, d) => EventOps.topPartsPerFlag(s, d), EventOps.topPartsPerFlagSql()),
+    Op("multimodal_stats", Multimodal.multimodalStats, Multimodal.multimodalStatsSql),
+    Op("multimodal_frames", Multimodal.multimodalFrames, Multimodal.multimodalFramesSql),
+    Op("multimodal_decode", Multimodal.multimodalDecode, Multimodal.multimodalDecodeSql),
+    Op("multimodal_audio", Multimodal.multimodalAudio, Multimodal.multimodalAudioSql),
+    Op("multimodal_video", Multimodal.multimodalVideo, Multimodal.multimodalVideoSql),
+    Op("corpus_manifest", Curation.corpusManifest, Curation.corpusManifestSql,
+      "graft_corpus_manifest"),
+    Op("bloom_semi_join", BloomJoin.bloomSemiJoinVolume, BloomJoin.bloomSemiJoinVolumeSql,
+      "graft_bloom_semi_join"),
+    Op("pack_sequences", (s, d) => Packing.packSequences(s, d), Packing.packSequencesSql),
+    Op("pack_length_buckets", Packing.lengthBuckets, Packing.lengthBucketsSql),
+    Op("eval_overlap", Decontamination.evalOverlap, Decontamination.evalOverlapSql),
+    Op("curate_filter",
+      (s, d) => DocStream.curateStream(Tables.documents(s, d)).orderBy("doc_id"),
+      DocStream.curateBatchSql),
+    Op("mixture_sample", Curation.mixtureSample, Curation.mixtureSampleSql),
+    Op("mixture_temperature", Curation.temperatureMixture, Curation.temperatureMixtureSql,
+      "graft_mixture_temp"),
+    Op("split_leakage_safe", ClusterOps.leakageSplit, ClusterOps.leakageSplitSql,
+      "graft_leakage_split"),
+    Op("dedup_priority", DedupOps.priorityDedup, DedupOps.priorityDedupSql, "graft_priority_dedup"),
+    Op("version_diff", Versioning.versionDiff, Versioning.versionDiffSql, "graft_version_diff"),
+    Op("manifest_incremental", Curation.incrementalManifest, Curation.incrementalManifestSql),
+    FixtureSql("sql_q1a", RefQueries.q1aSql),
+    FixtureSql("sql_q2", RefQueries.q2Sql),
+    FixtureSql("sql_q1b", RefQueries.q1bSql),
+    FixtureSql("sql_q1c", RefQueries.q1cSql),
+    FixtureSql("sql_eda", RefQueries.edaSql),
+    FixtureSql("sql_pricing", RefQueries.aggPricingSql),
+    FixtureSql("sql_q3", AnalyticsExt.q3ShippingPrioritySql()),
+    FixtureSql("sql_cum_revenue", AnalyticsExt.cumulativeRevenueSql),
+    FixtureSql("sql_funnel", EventOps.funnelStagesSql),
+    ViewSql("sql_dedup_exact", "graft_dedup_exact",
+      "content_hash, content_hash_b, keep_doc_id, n_copies", "keep_doc_id ASC"),
+    ViewSql("sql_near_dups", "graft_near_dups", "doc_a, doc_b, jaccard", "doc_a ASC, doc_b ASC"),
+    ViewSql("sql_spans", "graft_dedup_spans", "span_hash, n_docs, n_occ, first_doc",
+      "n_docs DESC, n_occ DESC, span_hash ASC"),
+    ViewSql("sql_span_text", "graft_span_top_text",
+      "span_hash, n_docs, n_occ, first_doc, first_pos, span_text",
+      "n_docs DESC, n_occ DESC, span_hash ASC"),
+    ViewSql("sql_span_rate", "graft_span_dup_rate", "doc_id, n_windows, n_dup_windows, dup_rate",
+      "doc_id ASC"),
+    ViewSql("sql_sessions", "graft_sessions",
+      "user_id, session_id, session_start, session_end, n_events", "user_id ASC, session_id ASC"),
+    ViewSql("sql_cosine_topk", "graft_cosine_topk", "vec_id, label, cos_sim",
+      "cos_sim DESC, vec_id ASC"),
+    ViewSql("sql_ann_topk", "graft_ann_topk", "vec_id, label, cos_sim", "cos_sim DESC, vec_id ASC"),
+    ViewSql("sql_simhash_pairs", "graft_simhash_pairs", "doc_a, doc_b, hamming",
+      "doc_a ASC, doc_b ASC"),
+    ViewSql("sql_manifest", "graft_corpus_manifest", "doc_id, source, lang, n_tokens, quality",
+      "doc_id ASC"),
+    ViewSql("sql_quality", "graft_quality", "doc_id, n_tokens, quality", "doc_id ASC"),
+    ViewSql("sql_keywords", "graft_keywords", "source, rk, term, tf, df, score",
+      "source ASC, rk ASC"),
+    ViewSql("sql_fingerprints", "graft_fingerprints", "doc_id, doc_hash, min_shingle_hash",
+      "doc_id ASC"),
+    ViewSql("sql_minhash_cand", "graft_minhash_candidates", "doc_a, doc_b, n_shared_bands",
+      "doc_a ASC, doc_b ASC"),
+    ViewSql("sql_bloom", "graft_bloom_semi_join", "l_returnflag, n_rows, sum_qty",
+      "l_returnflag ASC"),
+    ViewSql("sql_clusters", "graft_dedup_clusters",
+      "doc_id, cluster_id, cluster_size, is_canonical", "doc_id ASC"),
+    ViewSql("sql_chunks", "graft_chunks", "doc_id, chunk_id, start_tok, n_tok, chunk_text",
+      "doc_id ASC, chunk_id ASC"),
+    ViewSql("sql_repetition", "graft_repetition", "doc_id, n_tokens, dup_token_frac, " +
+      "top_token_frac, dup_char_frac, dup_bigram_frac, flagged", "doc_id ASC"),
+    ViewSql("sql_quantize", "graft_quantized", "vec_id, scale, q_sum, q_wsum, n_sat", "vec_id ASC"),
+    ViewSql("sql_export", "graft_shuffle_export", "doc_id, shard, pos, split",
+      "shard ASC, pos ASC"),
+    ViewSql("sql_source_profile", "graft_source_profile",
+      "source, n_docs, total_tokens, median_tokens, p90_tokens, n_langs", "source ASC"),
+    ViewSql("sql_containment", "graft_containment", "doc_a, doc_b, cont_a_in_b, cont_b_in_a",
+      "doc_a ASC, doc_b ASC"),
+    ViewSql("sql_boilerplate", "graft_boilerplate",
+      "doc_id, n_shingles, n_boiler, boiler_frac, flagged", "doc_id ASC"),
+    ViewSql("sql_semantic_dedup", "graft_semantic_dedup",
+      "vec_id, cid, n_prior, max_prior_cos, dropped", "vec_id ASC"),
+    ViewSql("sql_source_overlap", "graft_source_overlap",
+      "src_a, src_b, n_a, n_b, n_common, jaccard", "src_a ASC, src_b ASC"),
+    ViewSql("sql_version_diff", "graft_version_diff", "doc_id, status, old_hash, new_hash",
+      "doc_id ASC"),
+    ViewSql("sql_leakage_split", "graft_leakage_split",
+      "doc_id, cluster_id, cluster_size, split", "doc_id ASC"),
+    ViewSql("sql_priority_dedup", "graft_priority_dedup", "doc_id, source, dup_of", "doc_id ASC"),
+    ViewSql("sql_mixture_temp", "graft_mixture_temp",
+      "lang, n_selected, available, target_docs", "lang ASC"),
+    ViewSql("sql_vocab", "graft_vocab", "rk, term, cnt, cum_cnt, coverage", "rk ASC"),
+    ViewSql("sql_oov", "graft_oov", "source, n_docs, n_tokens, n_oov, oov_frac", "source ASC"),
+    ViewSql("sql_curriculum", "graft_curriculum", "doc_id, quality, pos", "pos ASC"),
+    ViewSql("sql_knn_label", "graft_knn_label", "query_id, pred_label, n_votes", "query_id ASC"),
+    ViewSql("sql_quartiles", "graft_quartiles", "doc_id, source, quality, quartile", "doc_id ASC"),
+    ViewSql("sql_redact", "graft_redact", "doc_id, n_emails, n_longnums, redacted_hash",
+      "doc_id ASC"),
+    Op("sample_per_source", (s, d) => TextAnalysis.samplePerSource(s, d),
+      TextAnalysis.samplePerSourceSql),
+    Op("sample_per_source_agg", (s, d) => TextAnalysis.samplePerSourceAgg(s, d),
+      TextAnalysis.samplePerSourceSql),
+    Op("rollup_pricing", AnalyticsExt.rollupPricing, AnalyticsExt.rollupPricingSql),
+    Op("except_suppliers", AnalyticsExt.exceptSuppliers, AnalyticsExt.exceptSuppliersSql),
+    Op("cube_pricing", AnalyticsExt.cubePricing, AnalyticsExt.cubePricingSql),
+    Op("grouping_sets_pricing", AnalyticsExt.groupingSetsPricing,
+      AnalyticsExt.groupingSetsPricingSql),
+    Op("q5_local_supplier", AnalyticsExt.q5LocalSupplierVolume,
+      AnalyticsExt.q5LocalSupplierVolumeSql),
+    Op("q7_volume_shipping", AnalyticsExt.q7VolumeShipping, AnalyticsExt.q7VolumeShippingSql),
+    Op("q10_returned_items", AnalyticsExt.q10ReturnedItems, AnalyticsExt.q10ReturnedItemsSql()),
+    Op("revenue_mom_growth", AnalyticsExt.revenueMomGrowth, AnalyticsExt.revenueMomGrowthSql),
+    Op("quality_quartiles", TextAnalysis.qualityQuartiles, TextAnalysis.qualityQuartilesSql,
+      "graft_quartiles"),
+    Op("text_redact", TextAnalysis.textRedact, TextAnalysis.textRedactSql, "graft_redact"),
+    Op("quality_quantiles_grid", TextAnalysis.qualityQuantilesGrid,
+      TextAnalysis.qualityQuantilesGridSql),
+    FixtureSql("sql_grouping_sets", AnalyticsExt.groupingSetsPricingSql),
+    FixtureSql("sql_q5", AnalyticsExt.q5LocalSupplierVolumeSql),
+    FixtureSql("sql_q7", AnalyticsExt.q7VolumeShippingSql),
+    FixtureSql("sql_q10", AnalyticsExt.q10ReturnedItemsSql()),
+    Op("intersect_suppliers", AnalyticsExt.intersectSuppliers, AnalyticsExt.intersectSuppliersSql),
+    FixtureSql("sql_cube_pricing", AnalyticsExt.cubePricingSql),
+    FixtureSql("sql_intersect_suppliers", AnalyticsExt.intersectSuppliersSql),
+    Op("median_quantity", AnalyticsExt.medianQuantity, AnalyticsExt.medianQuantitySql),
+    Op("revenue_by_month", AnalyticsExt.revenueByMonth, AnalyticsExt.revenueByMonthSql),
+    Op("q3_shipping_priority", AnalyticsExt.q3ShippingPriority,
+      AnalyticsExt.q3ShippingPrioritySql()),
+    Op("revenue_cumulative", AnalyticsExt.cumulativeRevenue, AnalyticsExt.cumulativeRevenueSql),
+    Op("revenue_trailing_range", AnalyticsExt.trailingRangeRevenue,
+      AnalyticsExt.trailingRangeRevenueSql, "graft_trailing_range"),
+    Op("q4_order_priority", TpchExt.q4OrderPriority, TpchExt.q4OrderPrioritySql),
+    Op("q6_forecast_revenue", TpchExt.q6ForecastRevenue, TpchExt.q6ForecastRevenueSql),
+    Op("q12_priority_class", TpchExt.q12PriorityClass, TpchExt.q12PriorityClassSql),
+    Op("q14_promo_revenue", TpchExt.q14PromoRevenue, TpchExt.q14PromoRevenueSql),
+    Op("q16_supplier_count", TpchExt.q16SupplierCount, TpchExt.q16SupplierCountSql),
+    Op("q18_large_orders", TpchExt.q18LargeOrders, TpchExt.q18LargeOrdersSql()),
+    Op("q19_disjunctive_revenue", TpchExt.q19DisjunctiveRevenue, TpchExt.q19DisjunctiveRevenueSql),
+    Op("q22_dormant_customers", TpchExt.q22DormantCustomers, TpchExt.q22DormantCustomersSql),
+    FixtureSql("sql_q4", TpchExt.q4OrderPrioritySql),
+    FixtureSql("sql_q6", TpchExt.q6ForecastRevenueSql),
+    FixtureSql("sql_q12", TpchExt.q12PriorityClassSql),
+    FixtureSql("sql_q14", TpchExt.q14PromoRevenueSql),
+    FixtureSql("sql_q16", TpchExt.q16SupplierCountSql),
+    FixtureSql("sql_q18", TpchExt.q18LargeOrdersSql()),
+    FixtureSql("sql_q19", TpchExt.q19DisjunctiveRevenueSql),
+    FixtureSql("sql_q22", TpchExt.q22DormantCustomersSql),
+    Op("q8_market_share", TpchComplete.q8MarketShare, TpchComplete.q8MarketShareSql),
+    Op("q9_product_profit", TpchComplete.q9ProductProfit, TpchComplete.q9ProductProfitSql),
+    Op("q11_important_parts", TpchComplete.q11ImportantParts, TpchComplete.q11ImportantPartsSql),
+    Op("q13_order_distribution", TpchComplete.q13OrderDistribution,
+      TpchComplete.q13OrderDistributionSql),
+    Op("q15_top_supplier", TpchComplete.q15TopSupplier, TpchComplete.q15TopSupplierSql),
+    Op("q17_small_qty_revenue", TpchComplete.q17SmallQtyRevenue,
+      TpchComplete.q17SmallQtyRevenueSql),
+    Op("q20_promotion_suppliers", TpchComplete.q20PromotionSuppliers,
+      TpchComplete.q20PromotionSuppliersSql),
+    Op("q21_waiting_suppliers", TpchComplete.q21WaitingSuppliers,
+      TpchComplete.q21WaitingSuppliersSql()),
+    FixtureSql("sql_q8", TpchComplete.q8MarketShareSql),
+    FixtureSql("sql_q9", TpchComplete.q9ProductProfitSql),
+    FixtureSql("sql_q11", TpchComplete.q11ImportantPartsSql),
+    FixtureSql("sql_q13", TpchComplete.q13OrderDistributionSql),
+    FixtureSql("sql_q15", TpchComplete.q15TopSupplierSql),
+    FixtureSql("sql_q17", TpchComplete.q17SmallQtyRevenueSql),
+    FixtureSql("sql_q20", TpchComplete.q20PromotionSuppliersSql),
+    FixtureSql("sql_q21", TpchComplete.q21WaitingSuppliersSql()),
+    Op("supplier_rank_pct", RankSetOps.supplierRankPct, RankSetOps.supplierRankPctSql),
+    Op("except_all_shipments", RankSetOps.exceptAllShipments, RankSetOps.exceptAllShipmentsSql),
+    Op("intersect_all_shipments", RankSetOps.intersectAllShipments,
+      RankSetOps.intersectAllShipmentsSql),
+    Op("pivot_pricing", RankSetOps.pivotPricing, RankSetOps.pivotPricingSql),
+    FixtureSql("sql_rank_pct", RankSetOps.supplierRankPctSql),
+    FixtureSql("sql_except_all", RankSetOps.exceptAllShipmentsSql),
+    FixtureSql("sql_intersect_all", RankSetOps.intersectAllShipmentsSql),
+    FixtureSql("sql_pivot_pricing", RankSetOps.pivotPricingSql),
+    Op("profile_lineitem", DataQuality.profileLineitem, DataQuality.profileLineitemSql),
+    Op("dq_checks", DataQuality.dqChecks, DataQuality.dqChecksSql),
+    Op("orders_reconcile", DataQuality.ordersReconcile, DataQuality.ordersReconcileSql,
+      "graft_reconcile"),
+    Op("doc_length_winsor", TextAnalysis.docLengthWinsor, TextAnalysis.docLengthWinsorSql,
+      "graft_winsor"),
+    FixtureSql("sql_profile", DataQuality.profileLineitemSql),
+    FixtureSql("sql_dq_checks", DataQuality.dqChecksSql),
+    Op("epoch_plan", Curation.epochPlan, Curation.epochPlanSql, "graft_epoch_plan"),
+    Op("above_avg_suppliers", TpchExt.aboveAvgSuppliers, TpchExt.aboveAvgSuppliersSql),
+    Op("sim_int8_topk", Quantization.int8TopK, Quantization.int8TopKSql, "graft_int8_topk"),
+    ViewSql("sql_epoch_plan", "graft_epoch_plan",
+      "lang, available_tokens, target_tokens, repeat_x1000", "lang ASC"),
+    FixtureSql("sql_above_avg", TpchExt.aboveAvgSuppliersSql),
+    ViewSql("sql_int8_topk", "graft_int8_topk", "vec_id, label, cos_sim8",
+      "cos_sim8 DESC, vec_id ASC"),
+    ViewSql("sql_reconcile", "graft_reconcile",
+      "o_orderstatus, n_orders, n_no_lines, n_contiguous, n_broken", "o_orderstatus ASC"),
+    ViewSql("sql_winsor", "graft_winsor",
+      "source, n_docs, p05_chars, p95_chars, n_clipped_lo, n_clipped_hi", "source ASC"),
+    ViewSql("sql_zorder", "graft_zorder", "bucket, n_rows, p_min, p_max, s_min, s_max",
+      "bucket ASC"),
+    ViewSql("sql_session_native", "graft_session_native",
+      "user_id, session_start, session_end, n_events", "user_id ASC, session_start ASC"),
+    ViewSql("sql_attribution", "graft_attribution", "click_id, view_id, user_id, gap_us",
+      "click_id ASC, view_id ASC"),
+    ViewSql("sql_trailing_range", "graft_trailing_range", "day, day_revenue, trailing_7d_revenue",
+      "day ASC"),
+    Op("dq_docs", DataQuality.dqDocs, DataQuality.dqDocsSql),
+    FixtureSql("sql_dq_docs", DataQuality.dqDocsSql),
+    Op("retrieval_bm25", Retrieval.bm25TopK, Retrieval.bm25TopKSql(), "graft_bm25"),
+    Op("retrieval_bm25_multi", Retrieval.bm25MultiTopK, Retrieval.bm25MultiTopKSql()),
+    Op("fuzzy_join_parts", Retrieval.fuzzyJoinParts, Retrieval.fuzzyJoinPartsSql(),
+      "graft_fuzzy_parts"),
+    Op("fuzzy_join_customers", Retrieval.fuzzyJoinCustomers, Retrieval.fuzzyJoinCustomersSql()),
+    ViewSql("sql_bm25", "graft_bm25", "doc_id, n_terms, score", "score DESC, doc_id ASC"),
+    ViewSql("sql_fuzzy_parts", "graft_fuzzy_parts", "name_a, name_b, dist, n_a, n_b",
+      "name_a ASC, name_b ASC"),
+    Op("entity_resolution", Retrieval.entityResolution, Retrieval.entityResolutionSql(),
+      "graft_entities"),
+    Op("sim_pq_topk", ProductQuant.pqTopK, ProductQuant.pqTopKSql, "graft_pq_topk"),
+    ViewSql("sql_pq_topk", "graft_pq_topk", "vec_id, label, pq_cos", "pq_cos DESC, vec_id ASC"),
+    Op("sim_ivfpq_topk", ProductQuant.ivfPqTopK, ProductQuant.ivfPqTopKSql),
+    Op("sim_ivfpq_residual_topk", ProductQuant.ivfPqResidualTopK,
+      ProductQuant.ivfPqResidualTopKSql),
+    Op("sim_ivfpq_residual_recall", ProductQuant.ivfPqResidualRecall,
+      ProductQuant.ivfPqResidualRecallSql),
+    Op("sim_pq_recall", ProductQuant.pqRecall, ProductQuant.pqRecallSql),
+    Op("pq_build", ProductQuant.pqBuild, ProductQuant.pqEncodeSql),
+    Op("pq_build_residual", ProductQuant.pqBuildResidual, ProductQuant.ivfPqResidualTopKSql),
+    Op("pq_codes_small", ProductQuant.pqCodesSmall, ProductQuant.pqCodesSmallSql),
+    Op("pq_encode", ProductQuant.pqEncode, ProductQuant.pqEncodeSql),
+    Op("sim_ann_recall", Similarity.annRecall, Similarity.annRecallSql),
+    Op("sim_ivf_recall", Similarity.ivfRecall, Similarity.ivfRecallSql),
+    Op("sim_ivfpq_recall", ProductQuant.ivfPqRecall, ProductQuant.ivfPqRecallSql),
+    ViewSql("sql_entities", "graft_entities",
+      "name, entity_id, n_parts, entity_size, is_canonical", "name ASC"),
+    Op("retrieval_bm25_join", Retrieval.bm25JoinTopK, Retrieval.bm25MultiTopKSql()),
+    Op("retrieval_bm25_maxp", Retrieval.bm25MaxP, Retrieval.bm25MaxPSql()),
+    Op("retrieval_hard_negs", Retrieval.bm25HardNegatives, Retrieval.bm25HardNegativesSql()),
+    Op("events_pagerank", GraphRank.pagerank, GraphRank.pagerankSql(), "graft_pagerank"),
+    ViewSql("sql_pagerank", "graft_pagerank", "node, pagerank", "node ASC"),
+    Op("graph_triangles", GraphRank.triangles, GraphRank.trianglesSql(), "graft_triangles"),
+    Op("skipgram_pairs", CoOccur.skipgramPairs, CoOccur.skipgramPairsSql(), "graft_skipgrams"),
+    Op("skipgram_pmi", CoOccur.skipgramPmi, CoOccur.skipgramPmiSql()),
+    ViewSql("sql_skipgrams", "graft_skipgrams", "center, context, cnt", "center ASC, context ASC"),
+    Op("bpe_merges", Bpe.merges, Bpe.mergesSql(), "graft_bpe_merges"),
+    Op("bpe_vocab", Bpe.vocab, Bpe.vocabSql()),
+    Op("bpe_encode", Bpe.encode, Bpe.encodeSql()),
+    Op("bpe_token_ids", Bpe.tokenIds, Bpe.tokenIdsSql()),
+    Op("bpe_decode", Bpe.decode, Bpe.decodeSql()),
+    Op("bpe_merges_scaled", Bpe.mergesScaled, Bpe.mergesScaledSql()),
+    Op("bpe_encode_scaled", Bpe.encodeScaled, Bpe.encodeScaledSql()),
+    Op("pack_from_bpe", Bpe.packFromBpe, Bpe.packFromBpeSql()),
     // build-phase registrations (the pq_build billing policy): first in
     // the family's alphabetical order, so sweeps bill training memos
     // here and the serving queries measure warm
-    "bpe_build"           -> ((s, dir) => Bpe.build(s, dir)),
-    "bpe_build_scaled"    -> ((s, dir) => Bpe.buildScaled(s, dir)),
-    // the docs-corpus scaled shipping chain (r15 verdict item 1):
-    // documents text -> 256-merge trainer -> token ids -> pack
-    "bpe_merges_scaled_docs" -> ((s, dir) => Bpe.mergesScaledDocs(s, dir)),
-    "bpe_token_ids_scaled" -> ((s, dir) => Bpe.tokenIdsScaled(s, dir)),
-    "bpe_decode_scaled"   -> ((s, dir) => Bpe.decodeScaled(s, dir)),
-    "pack_from_bpe_scaled" -> ((s, dir) => Bpe.packFromBpeScaled(s, dir)),
-    "sql_bpe_merges"      -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_bpe_merges")
-      s.sql("SELECT step, lhs, rhs, pair_count FROM graft_bpe_merges ORDER BY step ASC")
-    }),
-    "heavy_tokens"        -> ((s, dir) => HeavyHitters.heavyTokens(s, dir)),
-    "heavy_brands"        -> ((s, dir) => HeavyHitters.heavyBrands(s, dir)),
-    "sql_heavy_tokens"    -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_heavy_tokens")
-      s.sql("SELECT tok, cnt FROM graft_heavy_tokens ORDER BY cnt DESC, tok ASC")
-    }),
-    "graph_kcore"         -> ((s, dir) => GraphRank.kcore(s, dir)),
-    "sql_kcore"           -> ((s, dir) => {
-      graft.operators.PipelineViews.ensureOne(s, dir, "graft_kcore")
-      s.sql("SELECT node, deg FROM graft_kcore ORDER BY node ASC")
-    })
-  )
+    Op("bpe_build", Bpe.build, Bpe.mergesSql()),
+    Op("bpe_build_scaled", Bpe.buildScaled, Bpe.mergesScaledSql()),
+    // the docs-corpus scaled shipping chain: documents text -> 256-merge
+    // trainer -> token ids -> pack
+    Op("bpe_merges_scaled_docs", Bpe.mergesScaledDocs, Bpe.mergesScaledDocsSql()),
+    Op("bpe_token_ids_scaled", Bpe.tokenIdsScaled, Bpe.tokenIdsScaledSql()),
+    Op("bpe_decode_scaled", Bpe.decodeScaled, Bpe.decodeScaledSql()),
+    Op("pack_from_bpe_scaled", Bpe.packFromBpeScaled, Bpe.packFromBpeScaledSql()),
+    ViewSql("sql_bpe_merges", "graft_bpe_merges", "step, lhs, rhs, pair_count", "step ASC"),
+    Op("heavy_tokens", HeavyHitters.heavyTokens, HeavyHitters.heavyTokensSql(),
+      "graft_heavy_tokens"),
+    Op("heavy_brands", HeavyHitters.heavyBrands, HeavyHitters.heavyBrandsSql()),
+    ViewSql("sql_heavy_tokens", "graft_heavy_tokens", "tok, cnt", "cnt DESC, tok ASC"),
+    Op("graph_kcore", GraphRank.kcore, GraphRank.kcoreSql(), "graft_kcore"),
+    ViewSql("sql_kcore", "graft_kcore", "node, deg", "node ASC"))
+
+  private lazy val registry = index(rows)
+
+  /** Every registered query by name. */
+  def queries: Map[String, Build] = registry.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q1a_top_revenue"     -> RefQueries.q1aSql,
-    "q1b_top_quantity"    -> RefQueries.q1bSql,
-    "q1c_revenue_by_date" -> RefQueries.q1cSql,
-    "q2_supplier_join"    -> RefQueries.q2Sql,
-    "eda_lineitem_stats"  -> RefQueries.edaSql,
-    "agg_pricing_summary" -> RefQueries.aggPricingSql,
-    "text_stats"          -> TextAnalysis.textStatsSql,
-    "lang_id_confusion"   -> TextAnalysis.langIdConfusionSql,
-    "lang_id_ngram"       -> TextAnalysis.langIdNgramConfusionSql,
-    "quality_score"       -> TextAnalysis.qualityScoreSql,
-    "token_counts"        -> TextAnalysis.tokenCountsSql,
-    "fingerprints"        -> TextAnalysis.fingerprintsSql,
-    "text_keywords"       -> TextAnalysis.keywordsPerSourceSql(),
-    "text_keywords_kmv"   -> TextAnalysis.keywordsPerSourceKmvSql(),
-    "approx_distinct_tokens" -> TextAnalysis.approxDistinctTokensSql,
-    "dedup_exact"         -> DedupOps.dedupExactSql,
-    "dedup_spans"         -> SpanDedup.dedupSpansSql,
-    "span_dup_rate"       -> SpanDedup.spanDupRateSql,
-    "span_rate_w50"       -> SpanDedup.spanDupRateSqlFor(50),
-    "span_top_text"       -> SpanDedup.spanTopTextSql,
-    "dedup_incremental"   -> DedupOps.incrementalCandidatesSql,
-    "dedup_clusters"      -> ClusterOps.dedupClustersSql,
-    "quality_repetition"  -> QualityFilters.repetitionStatsSql,
-    "chunk_documents"     -> Chunking.chunkDocumentsSql,
-    "embed_quantize"      -> Quantization.embedQuantizeSql,
-    "shuffle_export"      -> Sharding.shuffleExportSql,
-    "dedup_survivors"     -> ClusterOps.dedupSurvivorsSql,
-    "dedup_rep_quality"   -> ClusterOps.canonicalByQualitySql,
-    "dedup_clusters_incr" -> ClusterOps.incrementalClustersSql,
-    "lm_bigram_score"     -> QualityFilters.bigramLmScoreSql,
-    "source_profile"      -> TextAnalysis.sourceProfileSql,
-    "vocab_induction"     -> TextAnalysis.vocabInductionSql,
-    "oov_rate"            -> TextAnalysis.oovStatsSql,
-    "curriculum_order"    -> Sharding.curriculumOrderSql,
-    "dedup_minhash_cand"  -> DedupOps.minhashCandidatesSql,
-    "dedup_jaccard"       -> DedupOps.nearDupJaccardSql,
-    "dedup_containment"   -> DedupOps.containmentPairsSql,
-    "boilerplate_stats"   -> QualityFilters.boilerplateStatsSql,
-    "source_overlap"      -> TextAnalysis.sourceOverlapSql,
-    "dedup_simhash"       -> DedupOps.simhashSignaturesSql,
-    "dedup_simhash_pairs" -> DedupOps.simhashNearDupsSql,
-    "sim_cosine_topk"     -> Similarity.cosineTopKSql,
-    "sim_ann_topk"        -> Similarity.annTopKSql,
-    "sim_ivf_topk"        -> Similarity.ivfTopKSql,
-    "sim_ivf_trained"     -> Similarity.ivfTrainedTopKSql,
-    "sim_embedding_dups"  -> Similarity.embeddingNearDupsSql,
-    "semantic_dedup"      -> Similarity.semanticDedupSql,
-    "knn_label"           -> Similarity.knnLabelSql,
-    "knn_label_ivf"       -> Similarity.knnLabelIvfSql,
-    "knn_label_ivf_auto"  -> Similarity.knnLabelIvfAutoSql,
-    "cell_quality"        -> Similarity.cellQualityReportSql,
-    "events_hourly"       -> EventOps.hourlyEventCountsSql,
-    "events_hourly_incr"  -> EventOps.hourlyCountsIncrementalSql,
-    "events_sliding"      -> EventOps.slidingEventCountsSql,
-    "events_sessions"     -> EventOps.sessionizeSql(),
-    "events_json_props"   -> EventOps.propsExtractSql,
-    "events_asof"         -> EventOps.purchaseAttributionSql,
-    "events_range_join"   -> EventOps.nearbyClickCountsSql,
-    "events_attribution"  -> EventOps.attributionWindowSql,
-    "events_session_native" -> EventOps.sessionWindowNativeSql(),
-    "zorder_layout"       -> LayoutOps.zorderLayoutSql,
-    "events_funnel"       -> EventOps.funnelStagesSql,
-    "events_retention"    -> EventOps.cohortRetentionSql,
-    "dedup_report"        -> ClusterOps.dedupReportSql,
-    "cluster_size_hist"   -> ClusterOps.clusterSizeHistogramSql,
-    "events_transitions"  -> EventOps.sessionTransitionsSql(),
-    "topk_per_group"      -> EventOps.topPartsPerFlagSql(),
-    "multimodal_stats"    -> Multimodal.multimodalStatsSql,
-    "multimodal_frames"   -> Multimodal.multimodalFramesSql,
-    "multimodal_decode"   -> Multimodal.multimodalDecodeSql,
-    "multimodal_audio"    -> Multimodal.multimodalAudioSql,
-    "multimodal_video"    -> Multimodal.multimodalVideoSql,
-    "corpus_manifest"     -> Curation.corpusManifestSql,
-    "bloom_semi_join"     -> BloomJoin.bloomSemiJoinVolumeSql,
-    "pack_sequences"      -> Packing.packSequencesSql,
-    "eval_overlap"        -> Decontamination.evalOverlapSql,
-    "curate_filter"       -> graft.streaming.DocStream.curateBatchSql,
-    "mixture_sample"      -> Curation.mixtureSampleSql,
-    "mixture_temperature" -> Curation.temperatureMixtureSql,
-    "split_leakage_safe"  -> ClusterOps.leakageSplitSql,
-    "dedup_priority"      -> DedupOps.priorityDedupSql,
-    "version_diff"        -> graft.operators.Versioning.versionDiffSql,
-    "manifest_incremental" -> Curation.incrementalManifestSql,
-    "sql_q1a"             -> RefQueries.q1aSql,
-    "sql_q2"              -> RefQueries.q2Sql,
-    "sql_q1b"             -> RefQueries.q1bSql,
-    "sql_q1c"             -> RefQueries.q1cSql,
-    "sql_eda"             -> RefQueries.edaSql,
-    "sql_pricing"         -> RefQueries.aggPricingSql,
-    "sql_q3"              -> AnalyticsExt.q3ShippingPrioritySql(),
-    "sql_cum_revenue"     -> AnalyticsExt.cumulativeRevenueSql,
-    "sql_funnel"          -> EventOps.funnelStagesSql,
-    "sql_dedup_exact"     -> DedupOps.dedupExactSql,
-    "sql_near_dups"       -> DedupOps.nearDupJaccardSql,
-    "sql_spans"           -> SpanDedup.dedupSpansSql,
-    "sql_span_rate"       -> SpanDedup.spanDupRateSql,
-    "sql_span_text"       -> SpanDedup.spanTopTextSql,
-    "sql_sessions"        -> EventOps.sessionizeSql(),
-    "sql_cosine_topk"     -> Similarity.cosineTopKSql,
-    "sql_ann_topk"        -> Similarity.annTopKSql,
-    "sql_simhash_pairs"   -> DedupOps.simhashNearDupsSql,
-    "sql_manifest"        -> Curation.corpusManifestSql,
-    "sql_quality"         -> TextAnalysis.qualityScoreSql,
-    "sql_keywords"        -> TextAnalysis.keywordsPerSourceSql(),
-    "sql_fingerprints"    -> TextAnalysis.fingerprintsSql,
-    "sql_minhash_cand"    -> DedupOps.minhashCandidatesSql,
-    "sql_bloom"           -> BloomJoin.bloomSemiJoinVolumeSql,
-    "sql_clusters"        -> ClusterOps.dedupClustersSql,
-    "sql_chunks"          -> Chunking.chunkDocumentsSql,
-    "sql_repetition"      -> QualityFilters.repetitionStatsSql,
-    "sql_quantize"        -> Quantization.embedQuantizeSql,
-    "sql_export"          -> Sharding.shuffleExportSql,
-    "sql_source_profile"  -> TextAnalysis.sourceProfileSql,
-    "sql_containment"     -> DedupOps.containmentPairsSql,
-    "sql_boilerplate"     -> QualityFilters.boilerplateStatsSql,
-    "sql_semantic_dedup"  -> Similarity.semanticDedupSql,
-    "sql_source_overlap"  -> TextAnalysis.sourceOverlapSql,
-    "sql_version_diff"    -> graft.operators.Versioning.versionDiffSql,
-    "sql_leakage_split"   -> ClusterOps.leakageSplitSql,
-    "sql_priority_dedup"  -> DedupOps.priorityDedupSql,
-    "sql_mixture_temp"    -> Curation.temperatureMixtureSql,
-    "sql_vocab"           -> TextAnalysis.vocabInductionSql,
-    "sql_oov"             -> TextAnalysis.oovStatsSql,
-    "sql_curriculum"      -> Sharding.curriculumOrderSql,
-    "sql_knn_label"       -> Similarity.knnLabelSql,
-    "sample_per_source"   -> TextAnalysis.samplePerSourceSql,
-    "sample_per_source_agg" -> TextAnalysis.samplePerSourceSql,
-    "rollup_pricing"      -> AnalyticsExt.rollupPricingSql,
-    "except_suppliers"    -> AnalyticsExt.exceptSuppliersSql,
-    "cube_pricing"        -> AnalyticsExt.cubePricingSql,
-    "grouping_sets_pricing" -> AnalyticsExt.groupingSetsPricingSql,
-    "q5_local_supplier"   -> AnalyticsExt.q5LocalSupplierVolumeSql,
-    "q7_volume_shipping"  -> AnalyticsExt.q7VolumeShippingSql,
-    "q10_returned_items"  -> AnalyticsExt.q10ReturnedItemsSql(),
-    "revenue_mom_growth"  -> AnalyticsExt.revenueMomGrowthSql,
-    "quality_quartiles"   -> TextAnalysis.qualityQuartilesSql,
-    "text_redact"         -> TextAnalysis.textRedactSql,
-    "quality_quantiles_grid" -> TextAnalysis.qualityQuantilesGridSql,
-    "ivf_index_incr"      -> Similarity.knnCellIndexIncrementalSql,
-    "pack_length_buckets" -> Packing.lengthBucketsSql,
-    "events_trailing"     -> EventOps.trailingEventRatioSql,
-    "sql_quartiles"       -> TextAnalysis.qualityQuartilesSql,
-    "sql_redact"          -> TextAnalysis.textRedactSql,
-    "sql_grouping_sets"   -> AnalyticsExt.groupingSetsPricingSql,
-    "sql_q5"              -> AnalyticsExt.q5LocalSupplierVolumeSql,
-    "sql_q7"              -> AnalyticsExt.q7VolumeShippingSql,
-    "sql_q10"             -> AnalyticsExt.q10ReturnedItemsSql(),
-    "intersect_suppliers" -> AnalyticsExt.intersectSuppliersSql,
-    "sql_cube_pricing"    -> AnalyticsExt.cubePricingSql,
-    "sql_intersect_suppliers" -> AnalyticsExt.intersectSuppliersSql,
-    "median_quantity"     -> AnalyticsExt.medianQuantitySql,
-    "revenue_by_month"    -> AnalyticsExt.revenueByMonthSql,
-    "q3_shipping_priority" -> AnalyticsExt.q3ShippingPrioritySql(),
-    "revenue_cumulative"  -> AnalyticsExt.cumulativeRevenueSql,
-    "revenue_trailing_range" -> AnalyticsExt.trailingRangeRevenueSql,
-    "q4_order_priority"   -> TpchExt.q4OrderPrioritySql,
-    "q6_forecast_revenue" -> TpchExt.q6ForecastRevenueSql,
-    "q12_priority_class"  -> TpchExt.q12PriorityClassSql,
-    "q14_promo_revenue"   -> TpchExt.q14PromoRevenueSql,
-    "q16_supplier_count"  -> TpchExt.q16SupplierCountSql,
-    "q18_large_orders"    -> TpchExt.q18LargeOrdersSql(),
-    "q19_disjunctive_revenue" -> TpchExt.q19DisjunctiveRevenueSql,
-    "q22_dormant_customers" -> TpchExt.q22DormantCustomersSql,
-    "sql_q4"              -> TpchExt.q4OrderPrioritySql,
-    "sql_q6"              -> TpchExt.q6ForecastRevenueSql,
-    "sql_q12"             -> TpchExt.q12PriorityClassSql,
-    "sql_q14"             -> TpchExt.q14PromoRevenueSql,
-    "sql_q16"             -> TpchExt.q16SupplierCountSql,
-    "sql_q18"             -> TpchExt.q18LargeOrdersSql(),
-    "sql_q19"             -> TpchExt.q19DisjunctiveRevenueSql,
-    "sql_q22"             -> TpchExt.q22DormantCustomersSql,
-    "q8_market_share"     -> TpchComplete.q8MarketShareSql,
-    "q9_product_profit"   -> TpchComplete.q9ProductProfitSql,
-    "q11_important_parts" -> TpchComplete.q11ImportantPartsSql,
-    "q13_order_distribution" -> TpchComplete.q13OrderDistributionSql,
-    "q15_top_supplier"    -> TpchComplete.q15TopSupplierSql,
-    "q17_small_qty_revenue" -> TpchComplete.q17SmallQtyRevenueSql,
-    "q20_promotion_suppliers" -> TpchComplete.q20PromotionSuppliersSql,
-    "q21_waiting_suppliers" -> TpchComplete.q21WaitingSuppliersSql(),
-    "sql_q8"              -> TpchComplete.q8MarketShareSql,
-    "sql_q9"              -> TpchComplete.q9ProductProfitSql,
-    "sql_q11"             -> TpchComplete.q11ImportantPartsSql,
-    "sql_q13"             -> TpchComplete.q13OrderDistributionSql,
-    "sql_q15"             -> TpchComplete.q15TopSupplierSql,
-    "sql_q17"             -> TpchComplete.q17SmallQtyRevenueSql,
-    "sql_q20"             -> TpchComplete.q20PromotionSuppliersSql,
-    "sql_q21"             -> TpchComplete.q21WaitingSuppliersSql(),
-    "supplier_rank_pct"   -> RankSetOps.supplierRankPctSql,
-    "except_all_shipments" -> RankSetOps.exceptAllShipmentsSql,
-    "intersect_all_shipments" -> RankSetOps.intersectAllShipmentsSql,
-    "pivot_pricing"       -> RankSetOps.pivotPricingSql,
-    "sql_rank_pct"        -> RankSetOps.supplierRankPctSql,
-    "sql_except_all"      -> RankSetOps.exceptAllShipmentsSql,
-    "sql_intersect_all"   -> RankSetOps.intersectAllShipmentsSql,
-    "sql_pivot_pricing"   -> RankSetOps.pivotPricingSql,
-    "profile_lineitem"    -> DataQuality.profileLineitemSql,
-    "dq_checks"           -> DataQuality.dqChecksSql,
-    "orders_reconcile"    -> DataQuality.ordersReconcileSql,
-    "doc_length_winsor"   -> TextAnalysis.docLengthWinsorSql,
-    "sql_profile"         -> DataQuality.profileLineitemSql,
-    "sql_dq_checks"       -> DataQuality.dqChecksSql,
-    "epoch_plan"          -> Curation.epochPlanSql,
-    "above_avg_suppliers" -> TpchExt.aboveAvgSuppliersSql,
-    "sim_int8_topk"       -> Quantization.int8TopKSql,
-    "sql_epoch_plan"      -> Curation.epochPlanSql,
-    "sql_above_avg"       -> TpchExt.aboveAvgSuppliersSql,
-    "sql_int8_topk"       -> Quantization.int8TopKSql,
-    "sql_reconcile"       -> DataQuality.ordersReconcileSql,
-    "sql_winsor"          -> TextAnalysis.docLengthWinsorSql,
-    "sql_zorder"          -> LayoutOps.zorderLayoutSql,
-    "sql_session_native"  -> EventOps.sessionWindowNativeSql(),
-    "sql_attribution"     -> EventOps.attributionWindowSql,
-    "sql_trailing_range"  -> AnalyticsExt.trailingRangeRevenueSql,
-    "dq_docs"             -> DataQuality.dqDocsSql,
-    "sql_dq_docs"         -> DataQuality.dqDocsSql,
-    "retrieval_bm25"      -> Retrieval.bm25TopKSql(),
-    "retrieval_bm25_multi" -> Retrieval.bm25MultiTopKSql(),
-    "fuzzy_join_parts"    -> Retrieval.fuzzyJoinPartsSql(),
-    "fuzzy_join_customers" -> Retrieval.fuzzyJoinCustomersSql(),
-    "sql_bm25"            -> Retrieval.bm25TopKSql(),
-    "sql_fuzzy_parts"     -> Retrieval.fuzzyJoinPartsSql(),
-    "entity_resolution"   -> Retrieval.entityResolutionSql(),
-    "sim_pq_topk"         -> graft.operators.ProductQuant.pqTopKSql,
-    "sql_pq_topk"         -> graft.operators.ProductQuant.pqTopKSql,
-    "sim_ivfpq_topk"      -> graft.operators.ProductQuant.ivfPqTopKSql,
-    "sim_ivfpq_residual_topk" -> graft.operators.ProductQuant.ivfPqResidualTopKSql,
-    "sim_ivfpq_residual_recall" -> graft.operators.ProductQuant.ivfPqResidualRecallSql,
-    "sim_pq_recall"       -> graft.operators.ProductQuant.pqRecallSql,
-    "pq_build"            -> graft.operators.ProductQuant.pqEncodeSql,
-    "pq_build_residual"   -> graft.operators.ProductQuant.ivfPqResidualTopKSql,
-    "pq_codes_small"      -> graft.operators.ProductQuant.pqCodesSmallSql,
-    "pq_encode"           -> graft.operators.ProductQuant.pqEncodeSql,
-    "sim_ann_recall"      -> Similarity.annRecallSql,
-    "sim_ivf_recall"      -> Similarity.ivfRecallSql,
-    "sim_ivfpq_recall"    -> graft.operators.ProductQuant.ivfPqRecallSql,
-    "sql_entities"        -> Retrieval.entityResolutionSql(),
-    "retrieval_bm25_join" -> Retrieval.bm25MultiTopKSql(),
-    "retrieval_bm25_maxp" -> Retrieval.bm25MaxPSql(),
-    "retrieval_hard_negs" -> Retrieval.bm25HardNegativesSql(),
-    "events_pagerank"     -> GraphRank.pagerankSql(),
-    "sql_pagerank"        -> GraphRank.pagerankSql(),
-    "graph_triangles"     -> GraphRank.trianglesSql(),
-    "skipgram_pairs"      -> CoOccur.skipgramPairsSql(),
-    "skipgram_pmi"        -> CoOccur.skipgramPmiSql(),
-    "sql_skipgrams"       -> CoOccur.skipgramPairsSql(),
-    "bpe_merges"          -> Bpe.mergesSql(),
-    "bpe_vocab"           -> Bpe.vocabSql(),
-    "bpe_encode"          -> Bpe.encodeSql(),
-    "bpe_token_ids"       -> Bpe.tokenIdsSql(),
-    "bpe_decode"          -> Bpe.decodeSql(),
-    "bpe_merges_scaled"   -> Bpe.mergesScaledSql(),
-    "bpe_encode_scaled"   -> Bpe.encodeScaledSql(),
-    "pack_from_bpe"       -> Bpe.packFromBpeSql(),
-    "bpe_build"           -> Bpe.mergesSql(),
-    "bpe_build_scaled"    -> Bpe.mergesScaledSql(),
-    "bpe_merges_scaled_docs" -> Bpe.mergesScaledDocsSql(),
-    "bpe_token_ids_scaled" -> Bpe.tokenIdsScaledSql(),
-    "bpe_decode_scaled"   -> Bpe.decodeScaledSql(),
-    "pack_from_bpe_scaled" -> Bpe.packFromBpeScaledSql(),
-    "sql_bpe_merges"      -> Bpe.mergesSql(),
-    "heavy_tokens"        -> HeavyHitters.heavyTokensSql(),
-    "heavy_brands"        -> HeavyHitters.heavyBrandsSql(),
-    "sql_heavy_tokens"    -> HeavyHitters.heavyTokensSql(),
-    "graph_kcore"         -> GraphRank.kcoreSql(),
-    "sql_kcore"           -> GraphRank.kcoreSql()
-  )
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = registry.oracleSql
+
+  /** `(view, build)` of every [[Op]] row that names a pipeline view. */
+  private[graft] def views: Seq[(String, Build)] = registry.views
 }

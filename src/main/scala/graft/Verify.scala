@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,29 +16,7 @@ object Verify {
     // OPTIMIZATION time (a runaway join would fail its dump and the
     // round), on top of the physical-plan audit in PropertiesSpec.
     val spark = GraftSession.local()
-    // Overrides that change only the Spark side while the oracle SQL
-    // stays pinned would report false mismatches — refuse rather than
-    // mislead. The ANN plane count (oracle derives it from a live
-    // COUNT(*)) and the minhash bucket cap (oracle QUALIFY pins
-    // DefaultMinhashBucketCap) both have that property; the simhash hot
-    // cap does NOT (retrieval is exact at any cap) and needs no guard.
-    // (CurriculumBandsKey is band-invariant — spec-pinned — and needs
-    // no guard, like SimhashHotCapKey.) The reference-parity query
-    // parameters (top-K, date ranges, session gap) are runtime knobs by
-    // design but their oracle SQL bakes the defaults, so they carry the
-    // same false-mismatch property here.
-    for (key <- Seq(GraftConf.AnnPlanesKey, GraftConf.MinhashBucketCapKey,
-                    GraftConf.PackingShardsKey, GraftConf.ChunkSizeKey,
-                    GraftConf.ChunkStrideKey, GraftConf.ExportShardsKey,
-                    GraftConf.SemdedupCellCapKey, GraftConf.VocabSizeKey,
-                    GraftConf.KnnKKey, GraftConf.TopKKey,
-                    GraftConf.Q1StartKey, GraftConf.Q1EndKey,
-                    GraftConf.Q1cStartKey, GraftConf.Q1cEndKey,
-                    GraftConf.SessionGapKey, GraftConf.GroupTopKKey,
-                    GraftConf.SpanWindowKey, GraftConf.IvfKKey))
-      require(spark.conf.getOption(key).isEmpty,
-        s"$key is set; unset it before verifying " +
-          "(the oracle SQL pins this knob's default)")
+    requireOracleDefaults(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -53,4 +32,13 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Refuse a session that overrides any of [[GraftConf.OraclePinnedKeys]]:
+    * the Spark side would follow the override while the oracle SQL keeps
+    * the default, and the dump would report false mismatches. */
+  def requireOracleDefaults(spark: SparkSession): Unit =
+    for (key <- GraftConf.OraclePinnedKeys)
+      require(spark.conf.getOption(key).isEmpty,
+        s"$key is set; unset it before verifying " +
+          "(the oracle SQL pins this knob's default)")
 }

@@ -23,9 +23,9 @@ import graft.sources.Tables
   * fingerprint of the corpus directory's files, so rewriting a corpus
   * at the same path within a session builds a NEW `graft_ckpt_*` memo
   * and never serves the old checkpoint. The superseded memo stays
-  * registered (its blocks are held) until [[reset]]. Registered
-  * `PipelineViews` are not re-keyed: a view registered before the
-  * rewrite keeps its frame until re-registered.
+  * registered (its blocks are held) until [[reset]]. `PipelineViews`
+  * and `Tables.ensureViews` record the same tag, so the next
+  * registration after a rewrite builds the view afresh.
   */
 private[graft] object Materialize {
 

@@ -16,79 +16,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exceptions are the pipelines built on eager checkpoints (near-dup
   * pair discovery, the curation manifest): those materialize their
   * signature/survivor frames ONCE at registration — [[ensure]] is
-  * idempotent, so the cost is paid once per (session, dir), and a
-  * corpus rewrite at the same path needs a fresh session or a manual
-  * re-register (the same staleness contract as any checkpoint). */
+  * idempotent, so the cost is paid once per (session, corpus). A view
+  * is registered under its dir's `Materialize.dirTag`, which carries
+  * the listing fingerprint, so a corpus rewritten at the same path is
+  * registered afresh by the next [[ensureOne]] or [[ensure]]. */
 object PipelineViews {
 
-  /** Every pipeline operator whose result is a relation worth naming.
-    * One entry per view; all take (session, fixture dir). */
-  def views: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "graft_dedup_exact"        -> ((s, d) => DedupOps.dedupExact(s, d)),
-    "graft_dedup_spans"        -> ((s, d) => SpanDedup.dedupSpans(s, d)),
-    "graft_span_dup_rate"      -> ((s, d) => SpanDedup.spanDupRate(s, d)),
-    "graft_span_top_text"      -> ((s, d) => SpanDedup.spanTopText(s, d)),
-    "graft_minhash_candidates" -> ((s, d) => DedupOps.minhashCandidates(s, d)),
-    "graft_near_dups"          -> ((s, d) => DedupOps.nearDupJaccard(s, d)),
-    "graft_simhash"            -> ((s, d) => DedupOps.simhashSignatures(s, d)),
-    "graft_simhash_pairs"      -> ((s, d) => DedupOps.simhashNearDups(s, d)),
-    "graft_fingerprints"       -> ((s, d) => TextAnalysis.fingerprints(s, d)),
-    "graft_keywords"           -> ((s, d) => TextAnalysis.keywordsPerSource(s, d)),
-    "graft_quality"            -> ((s, d) => TextAnalysis.qualityScore(s, d)),
-    "graft_sessions"           -> ((s, d) => EventOps.sessionize(s, d)),
-    "graft_cosine_topk"        -> ((s, d) => Similarity.cosineTopK(s, d)),
-    "graft_ann_topk"           -> ((s, d) => Similarity.annTopK(s, d)),
-    "graft_corpus_manifest"    -> ((s, d) => Curation.corpusManifest(s, d)),
-    "graft_bloom_semi_join"    -> ((s, d) => BloomJoin.bloomSemiJoinVolume(s, d)),
-    "graft_dedup_clusters"     -> ((s, d) => ClusterOps.dedupClusters(s, d)),
-    "graft_dedup_incremental"  -> ((s, d) => DedupOps.incrementalCandidates(s, d)),
-    "graft_repetition"         -> ((s, d) => QualityFilters.repetitionStats(s, d)),
-    "graft_chunks"             -> ((s, d) => Chunking.chunkDocuments(s, d)),
-    "graft_quantized"          -> ((s, d) => Quantization.embedQuantize(s, d)),
-    "graft_shuffle_export"     -> ((s, d) => Sharding.shuffleExport(s, d)),
-    "graft_dedup_survivors"    -> ((s, d) => ClusterOps.dedupSurvivors(s, d)),
-    "graft_rep_quality"        -> ((s, d) => ClusterOps.canonicalByQuality(s, d)),
-    "graft_lm_score"           -> ((s, d) => QualityFilters.bigramLmScore(s, d)),
-    "graft_source_profile"     -> ((s, d) => TextAnalysis.sourceProfile(s, d)),
-    "graft_containment"        -> ((s, d) => DedupOps.containmentPairs(s, d)),
-    "graft_boilerplate"        -> ((s, d) => QualityFilters.boilerplateStats(s, d)),
-    "graft_source_overlap"     -> ((s, d) => TextAnalysis.sourceOverlap(s, d)),
-    "graft_semantic_dedup"     -> ((s, d) => Similarity.semanticDedup(s, d)),
-    "graft_version_diff"       -> ((s, d) => Versioning.versionDiff(s, d)),
-    "graft_leakage_split"      -> ((s, d) => ClusterOps.leakageSplit(s, d)),
-    "graft_priority_dedup"     -> ((s, d) => DedupOps.priorityDedup(s, d)),
-    "graft_mixture_temp"       -> ((s, d) => Curation.temperatureMixture(s, d)),
-    "graft_vocab"              -> ((s, d) => TextAnalysis.vocabInduction(s, d)),
-    "graft_oov"                -> ((s, d) => TextAnalysis.oovStats(s, d)),
-    "graft_curriculum"         -> ((s, d) => Sharding.curriculumOrder(s, d)),
-    "graft_knn_label"          -> ((s, d) => Similarity.knnLabel(s, d)),
-    "graft_knn_label_ivf"      -> ((s, d) => Similarity.knnLabelIvf(s, d)),
-    "graft_funnel"             -> ((s, d) => EventOps.funnelStages(s, d)),
-    "graft_transitions"        -> ((s, d) => EventOps.sessionTransitions(s, d)),
-    "graft_retention"          -> ((s, d) => EventOps.cohortRetention(s, d)),
-    "graft_dedup_report"       -> ((s, d) => ClusterOps.dedupReport(s, d)),
-    "graft_cluster_sizes"      -> ((s, d) => ClusterOps.clusterSizeHistogram(s, d)),
-    "graft_cell_quality"       -> ((s, d) => Similarity.cellQualityReport(s, d)),
-    "graft_quartiles"          -> ((s, d) => TextAnalysis.qualityQuartiles(s, d)),
-    "graft_redact"             -> ((s, d) => TextAnalysis.textRedact(s, d)),
-    "graft_epoch_plan"         -> ((s, d) => Curation.epochPlan(s, d)),
-    "graft_int8_topk"          -> ((s, d) => Quantization.int8TopK(s, d)),
-    "graft_reconcile"          -> ((s, d) => DataQuality.ordersReconcile(s, d)),
-    "graft_winsor"             -> ((s, d) => TextAnalysis.docLengthWinsor(s, d)),
-    "graft_zorder"             -> ((s, d) => LayoutOps.zorderLayout(s, d)),
-    "graft_session_native"     -> ((s, d) => EventOps.sessionWindowNative(s, d)),
-    "graft_attribution"        -> ((s, d) => EventOps.attributionWindow(s, d)),
-    "graft_trailing_range"     -> ((s, d) => AnalyticsExt.trailingRangeRevenue(s, d)),
-    "graft_bm25"               -> ((s, d) => Retrieval.bm25TopK(s, d)),
-    "graft_fuzzy_parts"        -> ((s, d) => Retrieval.fuzzyJoinParts(s, d)),
-    "graft_pq_topk"            -> ((s, d) => ProductQuant.pqTopK(s, d)),
-    "graft_entities"           -> ((s, d) => Retrieval.entityResolution(s, d)),
-    "graft_pagerank"           -> ((s, d) => GraphRank.pagerank(s, d)),
-    "graft_triangles"          -> ((s, d) => GraphRank.triangles(s, d)),
-    "graft_skipgrams"          -> ((s, d) => CoOccur.skipgramPairs(s, d)),
-    "graft_bpe_merges"         -> ((s, d) => Bpe.merges(s, d)),
-    "graft_heavy_tokens"       -> ((s, d) => HeavyHitters.heavyTokens(s, d)),
-    "graft_kcore"              -> ((s, d) => GraphRank.kcore(s, d)))
+  /** Every pipeline operator whose result is a relation worth naming:
+    * the `(view, build)` of each `SparkEntry` row that names a view. */
+  def views: Seq[(String, (SparkSession, String) => DataFrame)] = graft.SparkEntry.views
 
   private val ViewsDirKey = "spark.graft.pipelineViews.dir"
 
@@ -96,26 +32,35 @@ object PipelineViews {
     * for callers that need one named relation without paying the eager
     * materialization of every checkpoint-backed pipeline that full
     * [[ensure]] performs. */
-  def ensureOne(spark: SparkSession, sfDir: String, name: String): Unit = {
+  def ensureOne(spark: SparkSession, sfDir: String, name: String): Unit =
+    ensureTagged(spark, sfDir, Materialize.dirTag(spark, sfDir), name)
+
+  /** Registration is keyed on `tag`, the dir's [[Materialize.dirTag]]
+    * (taken before the build, so a racing rewrite can only make the
+    * next call register again). */
+  private def ensureTagged(spark: SparkSession, sfDir: String, tag: String, name: String): Unit = {
     val key = s"$ViewsDirKey.$name"
-    if (!spark.conf.getOption(key).contains(sfDir) || !spark.catalog.tableExists(name)) {
+    if (!spark.conf.getOption(key).contains(tag) || !spark.catalog.tableExists(name)) {
       val fn = views.collectFirst { case (`name`, f) => f }
         .getOrElse(throw new IllegalArgumentException(
           s"unknown pipeline view $name; known: ${views.map(_._1).mkString(", ")}"))
       fn(spark, sfDir).createOrReplaceTempView(name)
-      spark.conf.set(key, sfDir)
+      spark.conf.set(key, tag)
     }
   }
 
   /** Idempotent full registration, same contract as
     * `Tables.ensureViews`: each view re-registers only when the session
-    * points it elsewhere or it has been dropped. Registration state is
-    * tracked PER VIEW (one conf key each, shared with [[ensureOne]]) so
-    * the two paths stay consistent however they interleave across dirs
-    * — a single shared flag would let one path serve a view the other
-    * built from a different dataset. */
-  def ensure(spark: SparkSession, sfDir: String): Unit =
-    views.foreach { case (n, _) => ensureOne(spark, sfDir, n) }
+    * points it elsewhere, the corpus was rewritten, or it has been
+    * dropped. Registration state is tracked PER VIEW (one conf key
+    * each, shared with [[ensureOne]]) so the two paths stay consistent
+    * however they interleave across dirs — a single shared flag would
+    * let one path serve a view the other built from a different
+    * dataset. */
+  def ensure(spark: SparkSession, sfDir: String): Unit = {
+    val tag = Materialize.dirTag(spark, sfDir)
+    views.foreach { case (n, _) => ensureTagged(spark, sfDir, tag, n) }
+  }
 
   /** Drop every pipeline view and forget the registration, so the next
     * [[ensure]] rebuilds from scratch. `Materialize.reset` calls this:

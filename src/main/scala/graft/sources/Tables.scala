@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
+import graft.operators.Materialize
+
 /** Typed loaders for the harness parquet fixtures plus the reference's
   * pipe-delimited external-table format (SURVEY.md §1.1, §2.1 S1/S6:
   * `Query 1a/TopKNetProfitDriver.java:61` splits rows on `|`;
@@ -322,27 +324,34 @@ object Tables {
     * `spark.sql` path (the reference's Hive CLI entry point, SURVEY.md
     * §3.3) can run ANSI SQL against the same names the DuckDB oracle
     * uses. */
-  def registerAllViews(spark: SparkSession, sfDir: String): Unit = {
+  def registerAllViews(spark: SparkSession, sfDir: String): Unit =
+    register(spark, sfDir, Materialize.dirTag(spark, sfDir))
+
+  private def register(spark: SparkSession, sfDir: String, tag: String): Unit = {
     fixtureNames.foreach { n =>
       val df = if (n == "events") events(spark, sfDir) else load(spark, sfDir, n)
       df.createOrReplaceTempView(n)
     }
-    spark.conf.set(ViewsDirKey, sfDir)
+    spark.conf.set(ViewsDirKey, tag)
   }
 
   private val ViewsDirKey = "spark.graft.views.dir"
 
   /** Idempotent view setup: registers the fixture views only when the
-    * session isn't already pointed at `sfDir` AND every view actually
-    * exists (the conf flag alone would go stale if other code dropped
-    * or shadowed a temp view). Catalog registration is session state,
-    * not query work — hoisting it out of the per-query path keeps the
-    * declarative `spark.sql` entries measuring the query rather than
-    * catalog churn. */
-  def ensureViews(spark: SparkSession, sfDir: String): Unit =
-    if (!spark.conf.getOption(ViewsDirKey).contains(sfDir) ||
+    * session isn't already pointed at `sfDir`'s current corpus AND
+    * every view actually exists (the conf flag alone would go stale if
+    * other code dropped or shadowed a temp view). The flag holds the
+    * dir's `Materialize.dirTag`, taken before registering, so a corpus
+    * rewritten at the same path registers afresh. Catalog registration
+    * is session state, not query work — hoisting it out of the
+    * per-query path keeps the declarative `spark.sql` entries
+    * measuring the query rather than catalog churn. */
+  def ensureViews(spark: SparkSession, sfDir: String): Unit = {
+    val tag = Materialize.dirTag(spark, sfDir)
+    if (!spark.conf.getOption(ViewsDirKey).contains(tag) ||
         !fixtureNames.forall(spark.catalog.tableExists))
-      registerAllViews(spark, sfDir)
+      register(spark, sfDir, tag)
+  }
 
   /** Bucketed persistent table: pre-shuffles by `key` into `buckets`
     * files per partition so repeated joins/aggregations on `key` read

@@ -28,7 +28,13 @@ import graft.operators.Materialize
   *
   * `--plans` writes each query's formatted plan to
   * `<outDir>/<query>_<suffix>.txt` without running it: the before and
-  * after plan dumps a change is checked against. */
+  * after plan dumps a change is checked against.
+  *
+  * Building a memoized query's DataFrame runs its memo build
+  * ([[Materialize.memoized]] checkpoints at construction). For such a
+  * query the printed or `--plans` plan is its checkpoint scan, not the
+  * pipeline behind it, and the `<query>:plan` job lines are the memo
+  * build that was paid to get that plan. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val (sfDir, plans, given) = args.toList match {

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan of `src/main/scala`: native functions, optimizer rules and
   * planner strategies reach sessions through one install path, sessions
-  * through one factory, and profiling goes through one tool. */
+  * through one factory, profiling goes through one tool, and registered
+  * SQL queries reach their views through one row form each. */
 class SourceInvariantsSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -54,6 +55,19 @@ class SourceInvariantsSpec extends AnyFunSuite {
     assert(filesWith("def main(") == Seq("graft/Bench.scala", "graft/Verify.scala",
       "graft/tools/BenchPair.scala", "graft/tools/GenScale.scala",
       "graft/tools/Profile.scala", "graft/tools/ReconError.scala"))
+  }
+
+  test("SparkEntry registers views only inside its two SQL row forms") {
+    val lines = sources.collectFirst { case ("graft/SparkEntry.scala", t) => t }.get
+      .linesIterator.toSeq
+    /** The case class declared nearest above the one line calling `call`. */
+    def owner(call: String): String = {
+      val at = lines.indices.filter(lines(_).contains(call))
+      assert(at.size == 1, call)
+      lines.take(at.head + 1).reverseIterator.find(_.contains("case class ")).getOrElse("")
+    }
+    assert(owner("Tables.ensureViews(").contains("class FixtureSql("))
+    assert(owner("PipelineViews.ensureOne(").contains("class ViewSql("))
   }
 
   test("exactly one SparkSession.builder(), inside GraftSession") {

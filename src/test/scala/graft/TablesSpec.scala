@@ -12,7 +12,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.operators.{Materialize, RefQueries, TpchComplete}
+import graft.operators.{DedupOps, Materialize, RefQueries, TpchComplete}
 import graft.sources.Tables
 
 /** The per-session relation memo behind `Tables.parquet`: a warm build
@@ -163,5 +163,31 @@ class TablesSpec extends SparkSpec {
     assert(Materialize.dirTag(spark, dir) != tag)
     val after = memoRows
     assert(after > 0 && after < before)
+  }
+
+  /** Rows with columns in name order, sorted: a compare that ignores
+    * column and row order. */
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+
+  test("sql_q1a returns the new result after lineitem is rewritten at the same path") {
+    val dir = copyFixture(Tables.fixtureNames: _*)
+    def sqlRows = sortedRows(SparkEntry.queries("sql_q1a")(spark, dir))
+    val before = sqlRows
+    rewrite(Tables.lineitem(spark, dir).where(col("l_linenumber") === 1), s"$dir/lineitem.parquet")
+    val after = sqlRows
+    assert(after.nonEmpty && after != before)
+    assert(after == sortedRows(RefQueries.q1aTopRevenue(spark, dir)))
+  }
+
+  test("sql_dedup_exact returns the new result after documents is rewritten at the same path") {
+    val dir = copyFixture("documents")
+    def sqlRows = sortedRows(SparkEntry.queries("sql_dedup_exact")(spark, dir))
+    val before = sqlRows
+    rewrite(Tables.documents(spark, dir).where(col("doc_id") % 2 === 0),
+      s"$dir/documents.parquet")
+    val after = sqlRows
+    assert(after.nonEmpty && after != before)
+    assert(after == sortedRows(DedupOps.dedupExact(spark, dir)))
   }
 }
