@@ -422,25 +422,25 @@ object SparkEntry {
     Op("skipgram_pairs", CoOccur.skipgramPairs, CoOccur.skipgramPairsSql(), "graft_skipgrams"),
     Op("skipgram_pmi", CoOccur.skipgramPmi, CoOccur.skipgramPmiSql()),
     ViewSql("sql_skipgrams", "graft_skipgrams", "center, context, cnt", "center ASC, context ASC"),
-    Op("bpe_merges", Bpe.merges, Bpe.mergesSql(), "graft_bpe_merges"),
-    Op("bpe_vocab", Bpe.vocab, Bpe.vocabSql()),
-    Op("bpe_encode", Bpe.encode, Bpe.encodeSql()),
-    Op("bpe_token_ids", Bpe.tokenIds, Bpe.tokenIdsSql()),
-    Op("bpe_decode", Bpe.decode, Bpe.decodeSql()),
-    Op("bpe_merges_scaled", Bpe.mergesScaled, Bpe.mergesScaledSql()),
-    Op("bpe_encode_scaled", Bpe.encodeScaled, Bpe.encodeScaledSql()),
-    Op("pack_from_bpe", Bpe.packFromBpe, Bpe.packFromBpeSql()),
+    Op("bpe_merges", Bpe.merges(Bpe.Toy), Bpe.mergesSql(Bpe.Toy), "graft_bpe_merges"),
+    Op("bpe_vocab", Bpe.vocab(Bpe.Toy), Bpe.vocabSql(Bpe.Toy)),
+    Op("bpe_encode", Bpe.encode(Bpe.Toy), Bpe.encodeSql(Bpe.Toy)),
+    Op("bpe_token_ids", Bpe.tokenIds(Bpe.Toy), Bpe.tokenIdsSql(Bpe.Toy)),
+    Op("bpe_decode", Bpe.decode(Bpe.Toy), Bpe.decodeSql(Bpe.Toy)),
+    Op("bpe_merges_scaled", Bpe.merges(Bpe.CustScaled), Bpe.mergesSql(Bpe.CustScaled)),
+    Op("bpe_encode_scaled", Bpe.encode(Bpe.CustScaled), Bpe.encodeSql(Bpe.CustScaled)),
+    Op("pack_from_bpe", Bpe.packFromBpe(Bpe.Toy), Bpe.packFromBpeSql(Bpe.Toy)),
     // build-phase registrations (the pq_build billing policy): first in
     // the family's alphabetical order, so sweeps bill training memos
     // here and the serving queries measure warm
-    Op("bpe_build", Bpe.build, Bpe.mergesSql()),
-    Op("bpe_build_scaled", Bpe.buildScaled, Bpe.mergesScaledSql()),
+    Op("bpe_build", Bpe.merges(Bpe.Toy), Bpe.mergesSql(Bpe.Toy)),
+    Op("bpe_build_scaled", Bpe.merges(Bpe.CustScaled), Bpe.mergesSql(Bpe.CustScaled)),
     // the docs-corpus scaled shipping chain: documents text -> 256-merge
     // trainer -> token ids -> pack
-    Op("bpe_merges_scaled_docs", Bpe.mergesScaledDocs, Bpe.mergesScaledDocsSql()),
-    Op("bpe_token_ids_scaled", Bpe.tokenIdsScaled, Bpe.tokenIdsScaledSql()),
-    Op("bpe_decode_scaled", Bpe.decodeScaled, Bpe.decodeScaledSql()),
-    Op("pack_from_bpe_scaled", Bpe.packFromBpeScaled, Bpe.packFromBpeScaledSql()),
+    Op("bpe_merges_scaled_docs", Bpe.merges(Bpe.DocsScaled), Bpe.mergesSql(Bpe.DocsScaled)),
+    Op("bpe_token_ids_scaled", Bpe.tokenIds(Bpe.DocsScaled), Bpe.tokenIdsSql(Bpe.DocsScaled)),
+    Op("bpe_decode_scaled", Bpe.decode(Bpe.DocsScaled), Bpe.decodeSql(Bpe.DocsScaled)),
+    Op("pack_from_bpe_scaled", Bpe.packFromBpe(Bpe.DocsScaled), Bpe.packFromBpeSql(Bpe.DocsScaled)),
     ViewSql("sql_bpe_merges", "graft_bpe_merges", "step, lhs, rhs, pair_count", "step ASC"),
     Op("heavy_tokens", HeavyHitters.heavyTokens, HeavyHitters.heavyTokensSql(),
       "graft_heavy_tokens"),

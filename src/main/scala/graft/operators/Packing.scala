@@ -44,7 +44,7 @@ object Packing {
   /** The greedy concat-and-chunk core over ANY per-doc token-count
     * frame (doc_id, lang, n_toks) — shared by the whitespace-count
     * surface above and the trained-BPE-count surface
-    * ([[Bpe.tokenIds]] → `pack_from_bpe`), so a tokenizer swap changes
+    * ([[Bpe.encode]] → `pack_from_bpe`), so a tokenizer swap changes
     * ONLY the count column's provenance, never the packing plan. */
   private[graft] def packCore(spark: SparkSession, counts: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

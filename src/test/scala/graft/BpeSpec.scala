@@ -52,7 +52,7 @@ class BpeSpec extends SparkSpec {
 
   test("bpe_merges: learned rules equal the vector-replay reference on the fixture") {
     val (expected, _) = refBpe(fixtureWordCounts(), Bpe.Merges)
-    val got = Bpe.merges(spark, sf).collect()
+    val got = Bpe.merges(Bpe.Toy)(spark, sf).collect()
       .map(r => (r.getLong(0).toInt, r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(got == expected)
   }
@@ -63,7 +63,7 @@ class BpeSpec extends SparkSpec {
     val expected = segs.toSeq
       .flatMap { case (w, syms) => syms.map(_ -> wc(w)) }
       .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).sum }
-    val got = Bpe.vocab(spark, sf).collect()
+    val got = Bpe.vocab(Bpe.Toy)(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == expected)
     // total symbol mass only shrinks vs characters (each merge joins two)
@@ -81,7 +81,7 @@ class BpeSpec extends SparkSpec {
     val expected = docs.map { case (id, ws) =>
       (id, ws.length.toLong, ws.map(w => segs(w).length.toLong).sum)
     }.sortBy(_._1).toSeq
-    val got = Bpe.encode(spark, sf).collect()
+    val got = Bpe.encode(Bpe.Toy)(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == expected)
   }
@@ -98,7 +98,7 @@ class BpeSpec extends SparkSpec {
     val expected = docs.map { case (id, ws) =>
       id -> ws.flatMap(w => segs(w).map(symId)).toSeq
     }.toMap
-    val got = Bpe.tokenIdsFrame(spark, sf).collect()
+    val got = Bpe.tokenIdsFrame(Bpe.Toy)(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSeq
     assert(got.map(_._1) == got.map(_._1).sorted)
     for ((id, n, ids) <- got) {
@@ -108,7 +108,7 @@ class BpeSpec extends SparkSpec {
     assert(got.map(_._1).toSet == expected.keySet)
     // the REGISTERED surface canonicalizes ids to a space-joined string
     // (driver-gate shape: pandas-sortable scalar columns only)
-    val reg = Bpe.tokenIds(spark, sf).collect()
+    val reg = Bpe.tokenIds(Bpe.Toy)(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(2))).toMap
     for ((id, n, ids) <- got) assert(reg(id) == ids.mkString(" "))
   }
@@ -119,22 +119,10 @@ class BpeSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").filter(_.nonEmpty))
       .filter(_._2.nonEmpty).toMap
-    val got = Bpe.decode(spark, sf).collect()
+    val got = Bpe.decode(Bpe.Toy)(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got.keySet == docs.keySet)
     for ((id, ws) <- docs) assert(got(id) == ws.mkString(""), s"doc $id")
-  }
-
-  test("trainLoopLocal equals the distributed trainLoop on the fixture vocabulary") {
-    import spark.implicits._
-    val wc = fixtureWordCounts()
-    val (dist, distV) = Bpe.trainLoop(wc.toSeq.toDF("word", "cnt"), Bpe.Merges)
-    val (local, localV) = Bpe.trainLoopLocal(wc.toSeq, Bpe.Merges)
-    assert(local == dist)
-    // final segmentation states agree too (the encode-serving table)
-    val distSegs = distV.collect()
-      .map(r => r.getString(0) -> r.getString(2)).toMap
-    assert(localV.map { case (w, _, q) => w -> q }.toMap == distSegs)
   }
 
   test("bpe_merges_scaled: 256 rules equal the vector-replay reference over top-capped c_names") {
@@ -146,7 +134,7 @@ class BpeSpec extends SparkSpec {
     val capped = wc.toSeq.sortBy { case (w, c) => (-c, w) }
       .take(Bpe.TopWordTypes).toMap
     val (expected, _) = refBpe(capped, Bpe.ScaledMerges)
-    val got = Bpe.mergesScaled(spark, sf).collect()
+    val got = Bpe.merges(Bpe.CustScaled)(spark, sf).collect()
       .map(r => (r.getLong(0).toInt, r.getString(1), r.getString(2), r.getLong(3))).toSeq
     // sf0.001's 150 shared-prefix names exhaust before 256 rules — the
     // pinned early stop; the reference must land on the same step
@@ -171,7 +159,7 @@ class BpeSpec extends SparkSpec {
       if (inVocab.isEmpty) None // inner-join semantics: untrained words drop
       else Some((k, inVocab.length.toLong, inVocab.map(w => segs(w).length.toLong).sum))
     }.sortBy(_._1).toSeq
-    val got = Bpe.encodeScaled(spark, sf).collect()
+    val got = Bpe.encode(Bpe.CustScaled)(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == expected && got.nonEmpty)
   }
@@ -181,7 +169,7 @@ class BpeSpec extends SparkSpec {
     val capped = wc.toSeq.sortBy { case (w, c) => (-c, w) }
       .take(Bpe.TopWordTypes).toMap
     val (expected, _) = refBpe(capped, Bpe.ScaledMerges)
-    val got = Bpe.mergesScaledDocs(spark, sf).collect()
+    val got = Bpe.merges(Bpe.DocsScaled)(spark, sf).collect()
       .map(r => (r.getLong(0).toInt, r.getString(1), r.getString(2), r.getLong(3))).toSeq
     // the fixture documents vocabulary is small: training exhausts
     // before ScaledMerges and the reference must stop at the same step
@@ -204,7 +192,7 @@ class BpeSpec extends SparkSpec {
       if (inVocab.isEmpty) None // inner-join semantics
       else Some(id -> inVocab.flatMap(w => segs(w).map(symId)).toSeq)
     }.toMap
-    val got = Bpe.tokenIdsScaledFrame(spark, sf).collect()
+    val got = Bpe.tokenIdsFrame(Bpe.DocsScaled)(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSeq
     assert(got.map(_._1).toSet == expected.keySet)
     for ((id, n, ids) <- got) {
@@ -222,7 +210,7 @@ class BpeSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").filter(_.nonEmpty).filter(capped))
       .filter(_._2.nonEmpty).toMap
-    val got = Bpe.decodeScaled(spark, sf).collect()
+    val got = Bpe.decode(Bpe.DocsScaled)(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got.keySet == docs.keySet)
     for ((id, ws) <- docs) assert(got(id) == ws.mkString(""), s"doc $id")
@@ -238,7 +226,7 @@ class BpeSpec extends SparkSpec {
       .select(col("text")).collect()
       .flatMap(_.getString(0).split(" ").filter(_.nonEmpty))
     val totalToks = docs.filter(segs.contains).map(w => segs(w).length.toLong).sum
-    val packed = Bpe.packFromBpeScaled(spark, sf).collect()
+    val packed = Bpe.packFromBpe(Bpe.DocsScaled)(spark, sf).collect()
     assert(packed.map(_.getLong(4)).sum == totalToks && packed.nonEmpty)
     val byCell = packed.groupBy(r => (r.getString(0), r.getLong(1)))
     for ((_, rows) <- byCell) {
@@ -248,8 +236,8 @@ class BpeSpec extends SparkSpec {
   }
 
   test("pack_from_bpe round-trips the encode token counts into sequences") {
-    val packed = Bpe.packFromBpe(spark, sf).collect()
-    val encoded = Bpe.encode(spark, sf).collect()
+    val packed = Bpe.packFromBpe(Bpe.Toy)(spark, sf).collect()
+    val encoded = Bpe.encode(Bpe.Toy)(spark, sf).collect()
     assert(packed.map(_.getLong(4)).sum == encoded.map(_.getLong(2)).sum)
     assert(packed.nonEmpty)
     // within each (lang, shard), the first doc's first token is always
@@ -262,30 +250,63 @@ class BpeSpec extends SparkSpec {
   }
 
   test("merge application is leftmost-first non-overlapping (aaaa/aaa shapes)") {
-    import spark.implicits._
-    val wc = Seq(("aaaa", 10L), ("aaa", 7L), ("ab", 1L)).toDF("word", "cnt")
+    val wc = Seq(("aaaa", 10L), ("aaa", 7L), ("ab", 1L))
     // pair (a,a): aaaa has 3 adjacent occurrences but only 2 disjoint;
     // counting is positional (3*10 + 2*7 = 44), application is disjoint.
     val (learned, v) = Bpe.trainLoop(wc, 1)
     assert(learned.head._2 == "a" && learned.head._3 == "a" && learned.head._4 == 44L)
-    val segs = v.collect().map(r => r.getString(0) ->
-      r.getString(2).stripPrefix("·").stripSuffix("·").split("··").toSeq).toMap
+    val segs = v.map { case (w, _, q) => w ->
+      q.stripPrefix("·").stripSuffix("·").split("··").toSeq }.toMap
     assert(segs("aaaa") == Seq("aa", "aa"))
     assert(segs("aaa") == Seq("aa", "a"))
     assert(segs("ab") == Seq("a", "b"))
   }
 
   test("tiebreaks are (count desc, lhs asc, rhs asc)") {
-    import spark.implicits._
     // abba: pairs (a,b), (b,b), (b,a) each occur once -> (a,b) wins on lhs asc
-    val wc = Seq(("abba", 1L)).toDF("word", "cnt")
-    val (learned, _) = Bpe.trainLoop(wc, 1)
+    val (learned, _) = Bpe.trainLoop(Seq(("abba", 1L)), 1)
     assert((learned.head._2, learned.head._3) == ("a", "b"))
     // bbba: (b,b) x2 beats (b,a) x1 on count before any tiebreak
-    val wc2 = Seq(("bbba", 1L)).toDF("word", "cnt")
-    val (learned2, v2) = Bpe.trainLoop(wc2, 1)
+    val (learned2, v2) = Bpe.trainLoop(Seq(("bbba", 1L)), 1)
     assert((learned2.head._2, learned2.head._3, learned2.head._4) == ("b", "b", 2L))
-    val seg2 = v2.collect().head.getString(2)
-    assert(seg2 == "·bb··b··a·")
+    assert(v2.head._3 == "·bb··b··a·")
+  }
+
+  test("bpe_merges is the first 12 rules of bpe_merges_scaled_docs (one trainer, one cap)") {
+    val toy = Bpe.merges(Bpe.Toy)(spark, sf).collect().toSeq
+    val docs = Bpe.merges(Bpe.DocsScaled)(spark, sf).collect().toSeq
+    assert(docs.length > Bpe.Merges)
+    assert(toy == docs.take(Bpe.Merges))
+  }
+
+  test("degenerate documents: all-null text and < 12 available merges give the reference answer") {
+    // all-null text trains zero rules; "ab ba ab" allows exactly two
+    // ((a,b) then (b,a)) before every word is one symbol
+    for ((text, nRules) <- Seq((lit(null).cast("string"), 0), (lit("ab ba ab"), 2))) {
+      val dir = copyFixture("documents")
+      rewrite(Tables.documents(spark, sf).withColumn("text", text), s"$dir/documents.parquet")
+      val wc = Tables.documents(spark, dir).where(col("text").isNotNull)
+        .select(col("text")).collect()
+        .flatMap(_.getString(0).split(" ").filter(_.nonEmpty))
+        .groupBy(identity).map { case (w, ws) => w -> ws.length.toLong }
+      val (expected, segs) = refBpe(wc, Bpe.Merges)
+      assert(expected.length == nRules)
+      val rules = Bpe.merges(Bpe.Toy)(spark, dir).collect()
+        .map(r => (r.getLong(0).toInt, r.getString(1), r.getString(2), r.getLong(3))).toSeq
+      assert(rules == expected)
+      val vocab = Bpe.vocab(Bpe.Toy)(spark, dir).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(vocab == segs.toSeq.flatMap { case (w, syms) => syms.map(_ -> wc(w)) }
+        .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).sum })
+      val encoded = Bpe.encode(Bpe.Toy)(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val docs = Tables.documents(spark, dir).where(col("text").isNotNull)
+        .select(col("doc_id"), col("text")).collect()
+        .map(r => r.getLong(0) -> r.getString(1).split(" ").filter(_.nonEmpty))
+        .filter(_._2.nonEmpty)
+      assert(encoded == docs.map { case (id, ws) =>
+        (id, ws.length.toLong, ws.map(w => segs(w).length.toLong).sum)
+      }.sortBy(_._1).toSeq)
+    }
   }
 }

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan of `src/main/scala`: native functions, optimizer rules and
   * planner strategies reach sessions through one install path, sessions
-  * through one factory, profiling goes through one tool, and registered
-  * SQL queries reach their views through one row form each. */
+  * through one factory, profiling goes through one tool, registered
+  * SQL queries reach their views through one row form each, and every
+  * BPE tokenizer trains through one merge loop. */
 class SourceInvariantsSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -76,5 +77,11 @@ class SourceInvariantsSpec extends AnyFunSuite {
       Seq.fill(text.split(java.util.regex.Pattern.quote(builder), -1).length - 1)(f)
     }
     assert(hits == Seq("graft/GraftSession.scala"))
+  }
+
+  test("Bpe has one merge loop and no checkpoint of its own") {
+    val bpe = sources.collectFirst { case ("graft/operators/Bpe.scala", t) => t }.get
+    assert(!bpe.contains("localCheckpoint("))
+    assert(bpe.split("def trainLoop", -1).length - 1 == 1)
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM — never
@@ -26,4 +29,24 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val sf: String = TestSpark.sf
+
+  /** A private temp-dir copy of the named fixture tables, for specs
+    * that rewrite a corpus (never the shared fixture dir). */
+  protected def copyFixture(tables: String*): String = {
+    val dir = Files.createTempDirectory("spark-spec")
+    tables.foreach { t =>
+      Files.copy(Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet"))
+    }
+    dir.toString
+  }
+
+  /** Replace `path` with `df` written as a parquet directory, the way a
+    * corpus is rewritten in place. */
+  protected def rewrite(df: DataFrame, path: String): Unit = {
+    val stage = new Path(s"$path.stage")
+    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(path), true)
+    assert(fs.rename(stage, new Path(path)))
+  }
 }

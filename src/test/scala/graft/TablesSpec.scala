@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,24 +20,6 @@ import graft.sources.Tables
   * a stale or shared relation. Rewrites happen on private copies of the
   * fixture, never on the shared fixture dir. */
 class TablesSpec extends SparkSpec {
-
-  private def copyFixture(tables: String*): String = {
-    val dir = Files.createTempDirectory("tables-spec")
-    tables.foreach { t =>
-      Files.copy(Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet"))
-    }
-    dir.toString
-  }
-
-  /** Replace `path` with `df` written as a parquet directory, the way a
-    * corpus is rewritten in place. */
-  private def rewrite(df: DataFrame, path: String): Unit = {
-    val stage = new Path(s"$path.stage")
-    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(path), true)
-    assert(fs.rename(stage, new Path(path)))
-  }
 
   /** Spark jobs started on this thread while `body` runs. Jobs carry a
     * private job group; a marker job in the same group is posted last,
