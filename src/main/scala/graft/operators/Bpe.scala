@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sources.Tables
 
 /** Byte-pair-encoding tokenizer TRAINING and serving — the
@@ -31,8 +31,9 @@ import graft.sources.Tables
   *
   * Pinned representation (identical on both engines so the oracle can
   * replay training exactly): a word's symbol sequence is the string
-  * `·s1··s2··…··sn·` — every symbol wrapped in `·` (U+00B7, not in
-  * the corpus alphabet; [[graft.sources.Tables]] fixtures are
+  * `·s1··s2··…··sn·` — every symbol (initially one code point, so
+  * an emoji or a rare CJK char is one symbol) wrapped in `·` (U+00B7,
+  * not in the corpus alphabet; [[graft.sources.Tables]] fixtures are
   * lowercase ASCII). Wrapping each symbol in its OWN marker pair
   * makes merge application a plain left-to-right `replace(seq,
   * "·a··b·", "·ab·")`: adjacent occurrences don't share a separator
@@ -136,7 +137,10 @@ object Bpe {
     // step the map EQUALS the full recount (a zero-count key can never
     // linger to perturb `counts.isEmpty` or the argmax) — the merge
     // sequence is byte-identical; BpeSpec pins the replay.
-    val vocab = wc.map { case (w, c) => (w, c, w.flatMap(ch => s"$M$ch$M")) }
+    // wrap per CODE POINT (a non-BMP char is one symbol, not two lone
+    // surrogates) with exactly the oracle's regexp_replace(word, '(.)',
+    // …): RE2's `.` skips only '\n', as Java's does under (?d)
+    val vocab = wc.map { case (w, c) => (w, c, w.replaceAll("(?d)(.)", s"$M$$1$M")) }
       .toArray
     val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
     def addPairs(seq: String, cnt: Long): Unit = {
@@ -189,15 +193,24 @@ object Bpe {
     (learned.result(), vocab.toSeq)
   }
 
-  /** Trained state of `t`, memoized per (session, corpus listing): the
-    * learned rules (session-conf packed) plus the final (word, cnt, seq)
-    * segmentation frame over the capped vocabulary. Every surface of a
-    * tokenizer consumes ONE training run — without the memo each would
-    * re-collect the word table and re-run the driver loop. */
-  private def trainOver(spark: SparkSession, sfDir: String, t: Tokenizer)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
+  /** One tokenizer's training output: the learned (step, lhs, rhs,
+    * pair_count) rules, the final (word, cnt, seq) segmentation frame
+    * over the capped vocabulary, and its symbol vocabulary in
+    * symbol-ascending UTF-8 byte order ([[utf8Order]], matching both
+    * engines' binary string sort). */
+  private final case class Trained(rules: Seq[(Int, String, String, Long)],
+      state: DataFrame, symbols: IndexedSeq[String])
+
+  /** Trained state of `t`, memoized per (session, corpus listing); the
+    * rules and the symbol array are session-conf packed next to the
+    * checkpointed state. Every surface of a tokenizer consumes ONE
+    * training run and no serving query collects anything — without the
+    * memo each would re-collect the word table and re-run the driver
+    * loop. */
+  private def trainOver(spark: SparkSession, sfDir: String, t: Tokenizer): Trained = {
     val id = s"${t.corpus.table}_${t.nMerges}_${TopWordTypes}_${Materialize.dirTag(spark, sfDir)}"
     val rulesKey = s"spark.graft.bpe.rules.$id"
+    val symsKey = s"spark.graft.bpe.syms.$id"
     val state = Materialize.memoized(spark, s"bpe_$id") {
       val wc = words(spark, sfDir, t.corpus)
         .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
@@ -207,17 +220,21 @@ object Bpe {
       val (learned, fin) = trainLoop(wc, t.nMerges)
       spark.conf.set(rulesKey, learned
         .map { case (s, a, b, c) => s"$s\u0001$a\u0001$b\u0001$c" }.mkString("\u0002"))
+      spark.conf.set(symsKey, fin.flatMap { case (_, _, q) => symsOf(q) }
+        .distinct.sorted(utf8Order).mkString("\u0001"))
       spark.createDataFrame(
         spark.sparkContext.parallelize(fin.map { case (w, c, q) => Row(w, c, q) }, 1),
         StructType(Seq(StructField("word", StringType),
           StructField("cnt", LongType), StructField("seq", StringType))))
     }
-    val packed = spark.conf.get(rulesKey)
-    val rules = if (packed.isEmpty) Seq.empty
-      else packed.split("\u0002").toSeq.map { r =>
-        val f = r.split("\u0001"); (f(0).toInt, f(1), f(2), f(3).toLong)
-      }
-    (rules, state)
+    def unpack(key: String, sep: String): IndexedSeq[String] = {
+      val packed = spark.conf.get(key)
+      if (packed.isEmpty) IndexedSeq.empty else packed.split(sep).toIndexedSeq
+    }
+    val rules = unpack(rulesKey, "\u0002").map { r =>
+      val f = r.split("\u0001"); (f(0).toInt, f(1), f(2), f(3).toLong)
+    }
+    Trained(rules, state, unpack(symsKey, "\u0001"))
   }
 
   /** (step, lhs, rhs, pair_count): the learned merge rules in learning
@@ -225,25 +242,22 @@ object Bpe {
     * output of the `bpe_build*` registrations, which sort first in the
     * family so an alphabetical sweep bills the training memo to them
     * and the serving queries measure warm (the `pq_build` policy). */
-  def merges(t: Tokenizer)(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rules, _) = trainOver(spark, sfDir, t)
+  def merges(t: Tokenizer)(spark: SparkSession, sfDir: String): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        rules.map { case (s, a, b, c) => Row(s.toLong, a, b, c) }, 1),
+      spark.sparkContext.parallelize(trainOver(spark, sfDir, t).rules
+        .map { case (s, a, b, c) => Row(s.toLong, a, b, c) }, 1),
       StructType(Seq(StructField("step", LongType), StructField("lhs", StringType),
         StructField("rhs", StringType), StructField("pair_count", LongType))))
       .orderBy(col("step").asc)
-  }
 
   /** (symbol, occurrences): corpus-weighted counts of the post-merge
     * symbol vocabulary (token frequency under the trained tokenizer),
     * symbol asc. */
-  def vocab(t: Tokenizer)(spark: SparkSession, sfDir: String): DataFrame = {
-    val (_, v) = trainOver(spark, sfDir, t)
-    v.select(col("cnt"), explode(symsOf(col("seq"))).as("symbol"))
+  def vocab(t: Tokenizer)(spark: SparkSession, sfDir: String): DataFrame =
+    trainOver(spark, sfDir, t).state
+      .select(col("cnt"), explode(symsOf(col("seq"))).as("symbol"))
       .groupBy(col("symbol")).agg(sum(col("cnt")).as("occurrences"))
       .orderBy(col("symbol").asc)
-  }
 
   /** (key, n_words, n_bpe_tokens): per-row token counts of the corpus
     * under its trained tokenizer — the corpus ENCODE path. The trained
@@ -252,8 +266,8 @@ object Bpe {
     * vocabulary don't count, and rows with no trained word emit
     * nothing. No merge rule ever re-applies per corpus token. */
   def encode(t: Tokenizer)(spark: SparkSession, sfDir: String): DataFrame = {
-    val (_, v) = trainOver(spark, sfDir, t)
-    val wordLen = broadcast(v.select(col("word"), size(symsOf(col("seq"))).as("n_syms")))
+    val wordLen = broadcast(trainOver(spark, sfDir, t).state
+      .select(col("word"), size(symsOf(col("seq"))).as("n_syms")))
     val key = col(t.corpus.key)
     words(spark, sfDir, t.corpus)
       .join(wordLen, Seq("word"))
@@ -262,24 +276,19 @@ object Bpe {
       .orderBy(key.asc)
   }
 
-  /** The trained symbol vocabulary in symbol-ascending UTF-8 byte order
-    * ([[utf8Order]], matching both engines' binary string sort) and the
-    * (word, wids) table of each word's dense 1-based symbol ids, BOTH
-    * derived from one collect of the bounded trained state, so the
-    * forward and inverse maps cannot drift. The id table is
-    * ≤ [[TopWordTypes]] rows — always broadcastable. */
+  /** The trained symbol vocabulary ([[Trained.symbols]]) and the
+    * (word, wids) table of each word's dense 1-based symbol ids, mapped
+    * through a plan-literal map built from that same array, so the
+    * forward and inverse maps cannot drift. Built off the memo without
+    * a Spark job; the id table is ≤ [[TopWordTypes]] rows — always
+    * broadcastable. */
   private def symbolIds(spark: SparkSession, sfDir: String, t: Tokenizer)
       : (IndexedSeq[String], DataFrame) = {
-    val segs = trainOver(spark, sfDir, t)._2.collect().toIndexedSeq
-      .map(r => r.getString(0) -> symsOf(r.getString(2)))
-    val syms = segs.flatMap(_._2).distinct.sorted(utf8Order)
-    val id = syms.zipWithIndex.map { case (s, i) => s -> (i + 1).toLong }.toMap
-    val wordIds = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        segs.map { case (w, ss) => Row(w, ss.map(id)) }, 1),
-      StructType(Seq(StructField("word", StringType),
-        StructField("wids", ArrayType(LongType)))))
-    (syms, wordIds)
+    val tr = trainOver(spark, sfDir, t)
+    val idMap = typedlit(
+      tr.symbols.zipWithIndex.map { case (s, i) => s -> (i + 1).toLong }.toMap)
+    (tr.symbols, tr.state.select(col("word"),
+      transform(symsOf(col("seq")), s => element_at(idMap, s)).as("wids")))
   }
 
   /** (key, n_bpe_tokens, ids): per-row TOKEN-ID SEQUENCES of `c` —

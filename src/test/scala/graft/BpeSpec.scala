@@ -10,10 +10,19 @@ import graft.sources.Tables
   * `replace` representation. */
 class BpeSpec extends SparkSpec {
 
+  /** Unsigned UTF-8 byte order — DuckDB's and Spark's string sort. */
+  private val byteOrder: Ordering[String] =
+    Ordering.by((s: String) => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      .toSeq.map(_ & 0xff))(Ordering.Implicits.seqOrdering[Seq, Int])
+
   /** Reference implementation: greedy BPE over a (word -> count) map
-    * using symbol VECTORS, leftmost-first non-overlapping merges. */
+    * using symbol VECTORS (one initial symbol per code point),
+    * leftmost-first non-overlapping merges, ties broken in
+    * [[byteOrder]]. */
   private def refBpe(wc: Map[String, Long], n: Int): (Seq[(Int, String, String, Long)], Map[String, Vector[String]]) = {
-    var segs: Map[String, Vector[String]] = wc.keys.map(w => w -> w.map(_.toString).toVector).toMap
+    var segs: Map[String, Vector[String]] = wc.keys.map(w => w ->
+      w.codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp)))).toMap
+    val tieOrd = Ordering.Tuple3(Ordering.Long, byteOrder, byteOrder)
     val learned = Seq.newBuilder[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -25,7 +34,7 @@ class BpeSpec extends SparkSpec {
       }
       if (counts.isEmpty) exhausted = true // pinned early stop
       else {
-        val ((a, b), c) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
+        val ((a, b), c) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }(tieOrd)
         learned += ((step, a, b, c))
         segs = segs.map { case (w, syms) =>
           val out = Vector.newBuilder[String]
@@ -279,10 +288,15 @@ class BpeSpec extends SparkSpec {
     assert(toy == docs.take(Bpe.Merges))
   }
 
-  test("degenerate documents: all-null text and < 12 available merges give the reference answer") {
-    // all-null text trains zero rules; "ab ba ab" allows exactly two
-    // ((a,b) then (b,a)) before every word is one symbol
-    for ((text, nRules) <- Seq((lit(null).cast("string"), 0), (lit("ab ba ab"), 2))) {
+  test("degenerate documents: all-null, emoji and < 12 available merges give the reference answer") {
+    // all-null text trains zero rules; each other text allows exactly
+    // two merges before every word is one symbol. An emoji is ONE
+    // initial symbol (a code point, not two surrogates), and the
+    // (ｂ,😀)/(😀,ｂ) tie goes to UTF-8 byte order, where U+FF42 sorts
+    // below U+1F600 (UTF-16 code-unit order says the opposite)
+    for ((text, nRules) <- Seq((lit(null).cast("string"), 0), (lit("ab ba ab"), 2),
+        (lit("\ud83d\ude00\ud83d\ude00 \ud83d\ude00a"), 2),
+        (lit("\uff42\ud83d\ude00 \ud83d\ude00\uff42"), 2))) {
       val dir = copyFixture("documents")
       rewrite(Tables.documents(spark, sf).withColumn("text", text), s"$dir/documents.parquet")
       val wc = Tables.documents(spark, dir).where(col("text").isNotNull)
@@ -307,6 +321,17 @@ class BpeSpec extends SparkSpec {
       assert(encoded == docs.map { case (id, ws) =>
         (id, ws.length.toLong, ws.map(w => segs(w).length.toLong).sum)
       }.sortBy(_._1).toSeq)
+      val symId = segs.values.flatten.toSeq.distinct.sorted(byteOrder)
+        .zipWithIndex.map { case (s, i) => s -> (i + 1).toLong }.toMap
+      val ids = Bpe.tokenIds(Bpe.Toy)(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+      assert(ids == docs.map { case (id, ws) =>
+        val seq = ws.flatMap(w => segs(w).map(symId))
+        (id, seq.length.toLong, seq.mkString(" "))
+      }.sortBy(_._1).toSeq)
+      val decoded = Bpe.decode(Bpe.Toy)(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(decoded == docs.map { case (id, ws) => id -> ws.mkString("") }.toMap)
     }
   }
 }
