@@ -1,4 +1,6 @@
 package graft
+import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
@@ -82,7 +84,13 @@ object Bench {
       }
       (times.result(), blockProbes.result(), compiles.result())
     }
+    // metaspace in use (MB): generated classes live there, so its growth
+    // is what the code cache's size costs
+    def metaspaceMb(): Double = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed / 1e6).sum
+    val metaStart = metaspaceMb()
     val (pass1, blocks1, compiles1) = runPass()
+    val metaPass1 = metaspaceMb()
     // drop persisted intermediates so pass 2 measures true recompute,
     // not cache reads (clearCache covers persisted plans; reset drops
     // the memoized checkpoint frames, which clearCache cannot see)
@@ -90,6 +98,7 @@ object Bench {
     graft.operators.Materialize.reset(spark)
     val probeMid = cpuProbe()
     val (pass2, blocks2, compiles2) = runPass()
+    val metaPass2 = metaspaceMb()
     val results = names.map { n =>
       val (t1, t2) = (pass1(n), pass2(n))
       n -> (if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2))
@@ -154,12 +163,13 @@ object Bench {
     def passMap(m: Map[String, Any]): String =
       names.map(n => q(n) + ":" + m(n)).mkString("{", ",", "}")
     val compilesJson = s"""{"pass1":${passMap(compiles1)},"pass2":${passMap(compiles2)}}"""
+    val metaJson = s"""{"start":${pf(metaStart)},"pass1":${pf(metaPass1)},"pass2":${pf(metaPass2)}}"""
     // self-identify the parallelism contract (r16 verdict item 1: the
     // driver's suspect_cpus_ignored heuristic fired because the JSON
     // carried no evidence the env var reached Spark — emit the resolved
     // core count AND the master string the session actually runs with)
     val masterStr = spark.sparkContext.master
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"master":${q(masterStr)},"errors":$errs,"conf":$conf,"cpu_probe":$probeJson,"exact_baseline":$exactJson,"build_phase":$buildJson,"queries":$qs,"queries_pass1":${passMap(pass1)},"queries_pass2":${passMap(pass2)},"sf":"$sfDir","codegen_compiles":$compilesJson}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"master":${q(masterStr)},"errors":$errs,"conf":$conf,"cpu_probe":$probeJson,"exact_baseline":$exactJson,"build_phase":$buildJson,"queries":$qs,"queries_pass1":${passMap(pass1)},"queries_pass2":${passMap(pass2)},"sf":"$sfDir","codegen_compiles":$compilesJson,"metaspace_mb":$metaJson}"""
     println(json)
     // Also persist to the repo: the driver captures the stdout tail,
     // which truncates the per-query map once the registry is this big

@@ -8,25 +8,28 @@ import org.apache.spark.sql.graft.NativeColumns.wrongNumArgs
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions._
-import graft.plans.{BindScanLiterals, NoCartesianGuard}
+import graft.plans.{BindScanLiterals, NoCartesianGuard, OnePartitionSort}
 
 /** Session-extensions installer: makes the library's native expressions,
-  * its optimizer rule AND its planner strategy available to ANY session
+  * its optimizer rule AND its planner strategies available to ANY session
   * (including pure-SQL users) via
   * `--conf spark.sql.extensions=graft.GraftExtensions` — the standard
   * deployment path for custom Catalyst surface on a cluster. Sessions
   * built in code get the same [[GraftExtensions.Functions]] table, rule
-  * and strategy from [[GraftExtensions.install]]. The injected rule
+  * and strategies from [[GraftExtensions.install]]. The injected rule
   * ([[graft.plans.NoCartesianGuard]]) is opt-in by conf and trivially
   * result-invariant: it fails runaway cartesian plans at optimization
   * time, it never rewrites them. The strategy
   * ([[graft.plans.BindScanLiterals]]) plans file scans as Spark does and
-  * only changes how a filter's literal operands reach generated code.
+  * only changes how a filter's literal operands reach generated code;
+  * [[graft.plans.OnePartitionSort]] sorts a small global ORDER BY in
+  * one task instead of range-partitioning it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(NoCartesianGuard(_))
     ext.injectPlannerStrategy(_ => BindScanLiterals)
+    ext.injectPlannerStrategy(_ => OnePartitionSort)
     GraftExtensions.Functions.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
   }
 }
@@ -72,8 +75,8 @@ object GraftExtensions {
       IvfProbes(a(0), a(1), a(2), intLit(a(3), "ivf_probes probe count"))),
     NativeFunction("ed1", 2, classOf[EditWithin1])(a => EditWithin1(a(0), a(1))))
 
-  /** Install [[Functions]], the guard rule and the literal-binding
-    * strategy on a session built in code (the extensions class covers
+  /** Install [[Functions]], the guard rule, the literal-binding and the
+    * one-partition sort strategies on a session built in code (the extensions class covers
     * cluster-deployed sessions). Idempotent. */
   def install(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -82,8 +85,9 @@ object GraftExtensions {
     if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[NoCartesianGuard]))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ NoCartesianGuard(spark)
-    if (!spark.experimental.extraStrategies.contains(BindScanLiterals))
-      spark.experimental.extraStrategies = BindScanLiterals +: spark.experimental.extraStrategies
+    Seq(OnePartitionSort, BindScanLiterals)
+      .filterNot(spark.experimental.extraStrategies.contains)
+      .foreach(s => spark.experimental.extraStrategies = s +: spark.experimental.extraStrategies)
   }
 
   private def intLit(e: Expression, what: String): Int = e match {

@@ -14,13 +14,21 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** The confs [[local]] builds its session with. Spark's code cache
+    * (`spark.sql.codegen.cache.maxEntries`, 100 by default) is a static
+    * conf, so it is sized here: one pass over the registry generates
+    * about 1,700 distinct classes, and with 100 entries every pass
+    * recompiled about 2,900 of them. */
+  def confs(cpus: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "5000")
+
   def local(cpus: Int = defaultCpus): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = confs(cpus)
+      .foldLeft(SparkSession.builder().master(s"local[$cpus]")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.install(spark)

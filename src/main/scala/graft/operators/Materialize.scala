@@ -22,8 +22,9 @@ import graft.sources.Tables
   * Staleness contract: memo keys end in [[dirTag]], which carries a
   * fingerprint of the corpus directory's files, so rewriting a corpus
   * at the same path within a session builds a NEW `graft_ckpt_*` memo
-  * and never serves the old checkpoint. The superseded memo stays
-  * registered (its blocks are held) until [[reset]]. `PipelineViews`
+  * and never serves the old checkpoint. Building it drops the memo it
+  * supersedes (same key up to the fingerprint) and frees its blocks, so
+  * a session holds one checkpoint per variant and dir. `PipelineViews`
   * and `Tables.ensureViews` record the same tag, so the next
   * registration after a rewrite builds the view afresh.
   */
@@ -41,12 +42,35 @@ private[graft] object Materialize {
     val name = Prefix + key
     if (spark.catalog.tableExists(name)) spark.table(name)
     else {
+      names(spark).filter(supersededBy(name)).foreach(drop(spark, _))
       val out = build.localCheckpoint(true)
       out.createOrReplaceTempView(name)
-      val known = spark.conf.getOption(NamesKey).map(_.split(",").toSet).getOrElse(Set.empty)
-      spark.conf.set(NamesKey, (known + name).mkString(","))
+      // read after `build`, which may register memos of its own
+      spark.conf.set(NamesKey, (names(spark) + name).mkString(","))
       out
     }
+  }
+
+  private def names(spark: SparkSession): Set[String] =
+    spark.conf.getOption(NamesKey).toSeq.flatMap(_.split(",")).filter(_.nonEmpty).toSet
+
+  /** A memo name ending in a [[dirTag]]: its last 12 characters are the
+    * listing fingerprint. */
+  private val Fingerprinted = ".*_[0-9a-f]{12}".r
+
+  /** Whether `old` is the memo `name` replaces: the same name up to the
+    * trailing fingerprint, so the same variant over a rewritten dir. */
+  private def supersededBy(name: String)(old: String): Boolean =
+    old != name && old.length == name.length && old.dropRight(12) == name.dropRight(12) &&
+      Fingerprinted.matches(name) && Fingerprinted.matches(old)
+
+  /** Free `name`'s blocks, drop its view and forget it. */
+  private def drop(spark: SparkSession, name: String): Unit = {
+    if (spark.catalog.tableExists(name)) {
+      free(spark.table(name))
+      spark.catalog.dropTempView(name)
+    }
+    spark.conf.set(NamesKey, (names(spark) - name).mkString(","))
   }
 
   /** The already-memoized frame for `key`, if this session built one —
@@ -87,16 +111,7 @@ private[graft] object Materialize {
     * recompute from), so they are invalidated in the same breath and
     * the next `PipelineViews.ensure` rebuilds them. */
   def reset(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.LogicalRDD
-    spark.conf.getOption(NamesKey).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
-      .foreach { name =>
-        if (spark.catalog.tableExists(name)) {
-          spark.table(name).queryExecution.analyzed.collectFirst {
-            case lr: LogicalRDD => lr.rdd
-          }.foreach(_.unpersist(blocking = false))
-          spark.catalog.dropTempView(name)
-        }
-      }
+    names(spark).foreach(drop(spark, _))
     spark.conf.unset(NamesKey)
     PipelineViews.invalidate(spark)
   }

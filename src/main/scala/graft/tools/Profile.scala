@@ -4,6 +4,7 @@ import java.io.PrintStream
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Semaphore, TimeUnit}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -21,10 +22,13 @@ import graft.operators.Materialize
   * cold (memos dropped after the plan was built, so the run rebuilds
   * them), warm (memos read) and recold (`clearCache` plus
   * [[Materialize.reset]] with JVM and code caches warm: Bench's pass-2
-  * condition). Every Spark job prints one line (duration, tasks and its
-  * description `<query>:<run>`), every driver gap over 20 ms between
-  * jobs prints too (planning, codegen and collects never show inside a
-  * job), and each run ends with its total and row count.
+  * condition). Each run collects the query's rows, as a client does (a
+  * `count()` would let the optimizer drop the final sort). Every Spark
+  * job prints one line (duration, tasks and its description
+  * `<query>:<run>`), every driver gap over 20 ms between jobs prints
+  * too (planning, codegen and collects never show inside a job), and
+  * each run ends with its total and row count, then its job count and
+  * the classes Spark's code generator compiled (code-cache misses).
   *
   * `--plans` writes each query's formatted plan to
   * `<outDir>/<query>_<suffix>.txt` without running it: the before and
@@ -71,8 +75,9 @@ object Profile {
 
   def run(spark: SparkSession, sfDir: String, names: Seq[String], out: PrintStream): Unit = {
     val sc = spark.sparkContext
-    // written and read on the listener bus thread only
+    // written on the listener bus thread; `jobs` is read once a run has drained
     val started = scala.collection.mutable.Map.empty[Int, (Long, Int, String)]
+    val jobs = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     @volatile var lastEnd = 0L
     val drained = new Semaphore(0)
     val listener = new SparkListener {
@@ -83,6 +88,7 @@ object Profile {
           if (js.time - lastEnd > 20)
             out.println(f"    [driver gap ${js.time - lastEnd}%6d ms before job ${js.jobId}]")
           started(js.jobId) = (js.time, js.stageInfos.map(_.numTasks).sum, desc)
+          jobs(desc) += 1
         }
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = started.remove(je.jobId) match {
@@ -113,12 +119,15 @@ object Profile {
           Materialize.reset(spark)
         }
         out.println(s"== $n ($tag) ==")
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val (rows, dt) = traced(s"$n:$tag") {
-          val rows = SparkEntry.queries(n)(spark, sfDir).count()
+          val rows = SparkEntry.queries(n)(spark, sfDir).collect().length
           (rows, (System.nanoTime() - t0) / 1e9)
         }
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         out.println(f"== $n ($tag) TOTAL $dt%.3f s rows=$rows ==")
+        out.println(s"== $n ($tag) COUNTS jobs=${jobs(s"$n:$tag")} compiles=$compiles ==")
       }
     } finally {
       sc.setJobDescription(null)

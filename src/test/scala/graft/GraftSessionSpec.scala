@@ -9,4 +9,10 @@ class GraftSessionSpec extends AnyFunSuite {
       Seq("a.b" -> "1", "c" -> "2", "d" -> "x=y"))
     assert(GraftSession.confOverrides(None).isEmpty)
   }
+
+  test("the session factory sizes Spark's static code cache for the registry") {
+    // a pass over the registry generates about 1,700 distinct classes
+    assert(GraftSession.confs(4).toMap.get("spark.sql.codegen.cache.maxEntries").contains("5000"))
+    assert(GraftSession.confs(3).toMap.get("spark.sql.shuffle.partitions").contains("3"))
+  }
 }

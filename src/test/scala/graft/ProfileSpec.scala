@@ -45,4 +45,18 @@ class ProfileSpec extends SparkSpec {
       assert(lines.exists(Job.matches), tag)
     }
   }
+
+  test("run mode: each run reports its job and compile counts") {
+    val buf = new ByteArrayOutputStream
+    Profile.run(spark, sf, Seq(Query), new PrintStream(buf, true, "UTF-8"))
+    val lines = buf.toString("UTF-8").linesIterator.toSeq
+    val Counts = s"== $Query \\((\\w+)\\) COUNTS jobs=(\\d+) compiles=(\\d+) ==".r
+    val counts = lines.collect { case Counts(tag, jobs, _) => tag -> jobs.toInt }
+    assert(counts.map(_._1) == Seq("cold", "warm", "recold"))
+    // each count is the run's own job lines
+    for ((tag, jobs) <- counts) {
+      val Job = s"\\s+job\\s+\\d+\\s+\\d+ ms\\s+tasks=\\s*\\d+\\s+$Query:$tag".r
+      assert(jobs > 0 && jobs == lines.count(Job.matches), tag)
+    }
+  }
 }

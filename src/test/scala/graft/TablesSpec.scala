@@ -147,6 +147,58 @@ class TablesSpec extends SparkSpec {
     assert(after > 0 && after < before)
   }
 
+  test("the listing walks nested dirs and globs to the same fingerprint as listFiles") {
+    val dir = Files.createTempDirectory("tables-spec-listing").toString
+    def write() = Tables.nation(spark, sf).write.mode("overwrite")
+      .partitionBy("n_regionkey").parquet(s"$dir/nation.parquet")
+    write()
+    /** Every leaf from Hadoop's recursive `listFiles`, per glob match. */
+    def listFiles(path: String): Seq[(String, Long, Long)] = {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.globStatus(p).toSeq.flatMap { root =>
+        val it = fs.listFiles(root.getPath, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq
+      }
+    }
+    for (path <- Seq(dir, s"$dir/nation.parquet", s"$dir/nat*/n_regionkey=[12]")) {
+      val listing = Tables.listing(spark, path)
+      val want = Tables.Listing(listFiles(path))
+      assert(listing.files.size > 1 && listing.files.sorted == want.files.sorted, path)
+      assert(listing.fingerprint == want.fingerprint, path)
+    }
+    assert(Tables.listing(spark, s"$dir/nat*/n_regionkey=[12]").files.size <
+      Tables.listing(spark, dir).files.size)
+    val before = Tables.listing(spark, dir).fingerprint
+    Thread.sleep(1100) // a new mtime even where it has one-second resolution
+    write()
+    assert(Tables.listing(spark, dir).fingerprint != before)
+  }
+
+  test("a documents rewrite drops the superseded memo and frees its blocks") {
+    val dir = copyFixture("documents")
+    def key = s"tables_spec_docs_${Materialize.dirTag(spark, dir)}"
+    def memo = Materialize.memoized(spark, key)(Tables.documents(spark, dir))
+    val before = memo.count()
+    val oldName = s"graft_ckpt_$key"
+    val oldRdd = spark.table(oldName).queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.get
+    assert(spark.sparkContext.getPersistentRDDs.contains(oldRdd.id))
+    rewrite(Tables.documents(spark, dir).where(col("doc_id") % 2 === 0), s"$dir/documents.parquet")
+    val after = memo.count()
+    assert(after > 0 && after < before)
+    assert(!spark.catalog.tableExists(oldName))
+    assert(!spark.sparkContext.getPersistentRDDs.contains(oldRdd.id))
+    assert(spark.catalog.tableExists(s"graft_ckpt_$key"))
+    assert(!spark.conf.get("spark.graft.ckpt.names").split(",").contains(oldName))
+    // another variant over the same dir is not a superseded memo of this one
+    val other = s"tables_spec_docs2_${Materialize.dirTag(spark, dir)}"
+    Materialize.memoized(spark, other)(Tables.documents(spark, dir)).count()
+    assert(spark.catalog.tableExists(s"graft_ckpt_$key"))
+  }
+
   /** Rows with columns in name order, sorted: a compare that ignores
     * column and row order. */
   private def sortedRows(df: DataFrame): Seq[String] =
