@@ -61,8 +61,8 @@ private[graft] object Materialize {
   /** Whether `old` is the memo `name` replaces: the same name up to the
     * trailing fingerprint, so the same variant over a rewritten dir. */
   private def supersededBy(name: String)(old: String): Boolean =
-    old != name && old.length == name.length && old.dropRight(12) == name.dropRight(12) &&
-      Fingerprinted.matches(name) && Fingerprinted.matches(old)
+    old != name && Fingerprinted.matches(old) && Fingerprinted.matches(name) &&
+      old.dropRight(12) == name.dropRight(12)
 
   /** Free `name`'s blocks, drop its view and forget it. */
   private def drop(spark: SparkSession, name: String): Unit = {
